@@ -15,6 +15,15 @@ from utxo_to_parquet_spark.sources import (
 from utxo_to_parquet_spark.sources.synthetic import EATER_SCRIPT, synthetic_utxo_rows
 
 
+# secp256k1 generator point G and its negation -G, uncompressed SEC form
+# (one of each Y parity, so both compression types 4 and 5 appear)
+_GX = 0x79BE667EF9DCBBAC55A06295CE870B07029BFCDB2DCE28D959F2815B16F81798
+_GY = 0x483ADA7726A3C4655DA4FBFC0E1108A8FD17B448A68554199C47D08FFB10D4B8
+_P = 2**256 - 2**32 - 977
+G_UNCOMPRESSED = b"\x04" + _GX.to_bytes(32, "big") + _GY.to_bytes(32, "big")
+NEG_G_UNCOMPRESSED = b"\x04" + _GX.to_bytes(32, "big") + (_P - _GY).to_bytes(32, "big")
+
+
 def expected_table(rows):
     """Reference-semantics expectation: txid byte-reversed hex."""
     return sorted(
@@ -31,11 +40,19 @@ def spark_table(df):
 
 
 def test_empty_snapshot(tmp_path, spark):
+    from utxo_to_parquet_spark.sources.convert import _range_bounds
+    from utxo_to_parquet_spark.sources.utxo_dump import frame_dump_files
+
     path = str(tmp_path / "empty.dump")
     write_utxo_dump(path, [])
     header, splits = index_utxo_dump(path)
     assert header.num_utxos == 0 and splits == []
     assert read_utxo_dump(spark, path).count() == 0
+    # no sample, so no boundaries: a sampled convert writes one empty bucket
+    assert _range_bounds(frame_dump_files(path), 8) == []
+    out = str(tmp_path / "empty.parquet")
+    assert convert_utxo_dump_to_parquet(spark, path, out, global_sort="sampled") == 0
+    assert spark.read.parquet(out).count() == 0
 
 
 def test_single_coin_each_script_type(tmp_path, spark):
@@ -203,6 +220,7 @@ def test_native_decode_parity_property(tmp_path):
     from hypothesis import strategies as st
 
     from utxo_to_parquet_spark.sources import native
+    from utxo_to_parquet_spark.sources import utxo_dump as ud
     from utxo_to_parquet_spark.sources.utxo_dump import Split
 
     if native.get_native_framer() is None:
@@ -225,6 +243,10 @@ def test_native_decode_parity_property(tmp_path):
             st.binary(min_size=1, max_size=8),
             st.sampled_from([2, 3]),
         ),
+        # uncompressed P2PK (types 4/5): the generator point and its negation
+        st.sampled_from(
+            [bytes([65]) + pub + bytes([0xAC]) for pub in (G_UNCOMPRESSED, NEG_G_UNCOMPRESSED)]
+        ),
     )
     row_strat = st.tuples(
         st.integers(min_value=0, max_value=2**20),  # txid seed (grouping via small space)
@@ -236,8 +258,12 @@ def test_native_decode_parity_property(tmp_path):
     )
 
     @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-    @given(st.lists(row_strat, min_size=1, max_size=200), st.integers(min_value=1, max_value=50))
-    def check(raw_rows, chunk_rows):
+    @given(
+        st.lists(row_strat, min_size=1, max_size=200),
+        st.integers(min_value=1, max_value=50),
+        st.integers(min_value=1, max_value=60),
+    )
+    def check(raw_rows, chunk_rows, sample_rows):
         rows = [
             (hashlib.sha256(str(seed % 7).encode()).digest(), v, h, cb, amt, s)
             for seed, v, h, cb, amt, s in raw_rows
@@ -245,11 +271,21 @@ def test_native_decode_parity_property(tmp_path):
         # consecutive equal txids group; seed%7 makes groups common
         path = str(tmp_path / "prop.dump")
         write_utxo_dump(path, rows)
-        _, splits = index_utxo_dump(path, chunk_rows=chunk_rows)
+        orig_rows, orig_framer = ud.SAMPLE_ROWS, native.frame_scan_native
+        ud.SAMPLE_ROWS = sample_rows  # strides > 1 on these small dumps
+        try:
+            ix = ud.frame_utxo_dump(path, chunk_rows=chunk_rows, use_cache=False)
+            native.frame_scan_native = lambda *a, **k: None  # the Python framer
+            ix_py = ud.frame_utxo_dump(path, chunk_rows=chunk_rows, use_cache=False)
+        finally:
+            ud.SAMPLE_ROWS, native.frame_scan_native = orig_rows, orig_framer
+        assert ix == ix_py  # C and Python framers: same splits, same sample
+        splits = ix.splits
         import os
 
         size = os.path.getsize(path)
         ends = [s.offset for s in splits[1:]] + [size]
+        decoded = []
         with open(path, "rb") as f:
             for s, end in zip(splits, ends):
                 f.seek(s.offset)
@@ -257,8 +293,6 @@ def test_native_decode_parity_property(tmp_path):
                 rb_native = native.decode_split_native(
                     data, s.carried_txid, s.carried_coins_left, s.num_rows
                 )
-                from utxo_to_parquet_spark.sources import utxo_dump as ud
-
                 # force the pure-Python path for the differential side
                 orig = native.decode_split_native
                 native.decode_split_native = lambda *a, **k: None
@@ -269,38 +303,109 @@ def test_native_decode_parity_property(tmp_path):
                 finally:
                     native.decode_split_native = orig
                 assert rb_native.to_pylist() == rb_py.to_pylist()
+                decoded += rb_py.column("script").to_pylist()
+        # each sampled prefix is the head of the decoded script at its row
+        heads = [bytes(sc[:7]).ljust(7, b"\x00") for sc in decoded[:: ix.sample_stride]]
+        assert ix.sample == b"".join(heads)
 
     check()
 
 
-def test_global_sort_produces_total_order(tmp_path, spark):
-    """global_sort=True range-partitions by script: files are disjoint
-    script ranges and concatenating them in file order yields one global
-    sorted order (the strictly-stronger layout of convert.py)."""
+def _check_range_layout(out, rows):
+    """Output rows equal ``rows`` as a multiset, every file is sorted by
+    script and the files' script ranges are pairwise disjoint. Returns
+    the per-file row counts."""
     import glob
-
-    rows = synthetic_utxo_rows(5_000, seed=21)
-    dump = str(tmp_path / "gs.dump")
-    out = str(tmp_path / "gs.parquet")
-    write_utxo_dump(dump, rows)
-    n = convert_utxo_dump_to_parquet(spark, dump, out, chunk_rows=1_000, global_sort=True)
-    assert n == 5_000
 
     import pyarrow.parquet as pq
 
     files = sorted(glob.glob(f"{out}/part-*"))
     assert len(files) >= 1
-    ranges = []
+    got, ranges, counts = [], [], []
     for fp in files:
-        scripts = pq.read_table(fp, columns=["script"]).column("script").to_pylist()
+        t = pq.read_table(fp)
+        scripts = t.column("script").to_pylist()
         assert scripts == sorted(scripts)  # sorted within file
         if scripts:
             ranges.append((scripts[0], scripts[-1]))
+        counts.append(t.num_rows)
+        got += [tuple(r.values()) for r in t.to_pylist()]
+    assert sorted(got) == expected_table(rows)
     # files sorted by part number are not necessarily range-ordered;
     # check disjointness instead: ranges must not overlap pairwise
     ranges.sort()
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2  # disjoint (equal keys may straddle: allow <=)
+    return counts
+
+
+@pytest.mark.parametrize("global_sort", [True, "sampled"])
+def test_global_sort_produces_total_order(tmp_path, spark, global_sort):
+    """global_sort=True range-partitions by script, and "sampled" does
+    the same from the framing pass's prefix sample: files are disjoint
+    script ranges and concatenating them in range order yields one
+    global sorted order (the strictly-stronger layout of convert.py)."""
+    rows = synthetic_utxo_rows(5_000, seed=21)
+    dump = str(tmp_path / "gs.dump")
+    out = str(tmp_path / "gs.parquet")
+    write_utxo_dump(dump, rows)
+    n = convert_utxo_dump_to_parquet(spark, dump, out, chunk_rows=1_000, global_sort=global_sort)
+    assert n == 5_000
+    _check_range_layout(out, rows)
+
+
+@pytest.mark.parametrize("framer", ["c", "python"])
+def test_sampled_global_sort_weights_shards_by_rows(tmp_path, spark, monkeypatch, framer):
+    """A two-shard directory with a 1:9 row split, whose shards cover
+    different script ranges: the small shard's sample must count for a
+    tenth of the rows, so every bucket holds n / buckets rows within
+    25%. A small SAMPLE_ROWS gives the shards different strides."""
+    from utxo_to_parquet_spark.sources import native, utxo_dump as ud
+
+    if framer == "c" and native.get_native_framer() is None:
+        pytest.skip("no C compiler available")
+    if framer == "python":
+        monkeypatch.setattr(native, "frame_scan_native", lambda *a, **k: None)
+    monkeypatch.setattr(ud, "SAMPLE_ROWS", 400)
+    rows = sorted(synthetic_utxo_rows(10_000, seed=23), key=lambda r: r[5])
+    shard_dir = tmp_path / "shards"
+    shard_dir.mkdir()
+    write_utxo_dump(str(shard_dir / "a.dump"), rows[:1_000])
+    write_utxo_dump(str(shard_dir / "b.dump"), rows[1_000:])
+    strides = [ix.sample_stride for _, ix in ud.frame_dump_files(str(shard_dir), chunk_rows=2_000)]
+    assert strides == [3, 23]
+    out = str(tmp_path / "shards.parquet")
+    n = convert_utxo_dump_to_parquet(spark, str(shard_dir), out, chunk_rows=2_000, global_sort="sampled")
+    assert n == 10_000
+    counts = _check_range_layout(out, rows)
+    buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(counts) == buckets
+    for c in counts:
+        assert abs(c - n / buckets) <= 0.25 * n / buckets, counts
+
+
+def test_sampled_convert_frames_once(tmp_path, spark, monkeypatch):
+    """Without the sidecar cache, a sampled convert still frames the
+    snapshot once: the sample comes from the same framing pass as the
+    decode splits."""
+    from utxo_to_parquet_spark.sources import utxo_dump as ud
+
+    calls = []
+    frame = ud.frame_utxo_dump
+
+    def counting(path, *a, **k):
+        calls.append(path)
+        return frame(path, *a, **k)
+
+    monkeypatch.setattr(ud, "frame_utxo_dump", counting)
+    dump = str(tmp_path / "once.dump")
+    write_utxo_dump(dump, synthetic_utxo_rows(3_000, seed=29))
+    out = str(tmp_path / "once.parquet")
+    n = convert_utxo_dump_to_parquet(
+        spark, dump, out, chunk_rows=1_000, global_sort="sampled", use_cache=False
+    )
+    assert n == 3_000
+    assert calls == [dump]
 
 
 def test_split_index_cache(tmp_path):
@@ -330,6 +435,22 @@ def test_split_index_cache(tmp_path):
         fh.write("{not json")
     h5, s5 = index_utxo_dump(path, chunk_rows=37)
     assert sum(s.num_rows for s in s5) == 900
+    # a sidecar without a sample (the format before the framing pass took
+    # one) is a miss too: the file is framed again, and the boundaries
+    # come from a full sample, never from an empty one
+    from utxo_to_parquet_spark.sources.convert import _range_bounds
+    from utxo_to_parquet_spark.sources.utxo_dump import frame_utxo_dump
+
+    ix = frame_utxo_dump(path, chunk_rows=37)
+    with open(sidecar) as fh:
+        doc = json.load(fh)
+    with open(sidecar, "w") as fh:
+        json.dump({k: doc[k] for k in ("size", "mtime_ns", "chunk_rows", "splits")}, fh)
+    assert frame_utxo_dump(path, chunk_rows=37) == ix
+    with open(sidecar) as fh:
+        assert json.load(fh)["sample"] == ix.sample.hex()  # rewritten
+    assert len(ix.sample) == 7 * 900
+    assert len(_range_bounds([(path, ix)], 4)) == 3
 
 
 def test_partitioned_output_prunes_height_ranges(tmp_path, spark):

@@ -21,25 +21,10 @@ writer — a documented, results-neutral fidelity gap (main.rs:212,214).
 
 from __future__ import annotations
 
-from .utxo_dump import read_utxo_dump_with_header
+import bisect
+import itertools
 
-# sampled global sort: fraction of decode splits sampled for boundary
-# estimation (1/SAMPLE_STRIDE of the data re-read; framing is cached)
-SAMPLE_STRIDE = 50
-
-
-def _script_prefix56(col):
-    """Order-preserving 56-bit integer image of the script's first 7
-    bytes (hex, zero-padded right so shorter-than-7-byte scripts keep
-    byte order, then base-16 → base-10). 56 bits fit a signed long; for
-    the dominant P2PKH population the 3 template bytes leave 4
-    hash-digest bytes of uniform resolution — plenty for <=2^20 range
-    buckets."""
-    from pyspark.sql import functions as F
-
-    return F.conv(
-        F.rpad(F.hex(F.substring(col, 1, 7)), 14, "0"), 16, 10
-    ).cast("long")
+from .utxo_dump import PREFIX_LEN, decode_frames, frame_dump_files, sample_stride
 
 
 def _hash_preimages(spark, n: int) -> list[int]:
@@ -77,44 +62,47 @@ def _hash_preimages(spark, n: int) -> list[int]:
 BUCKET_ROWS = 2_000_000
 
 
-def _sampled_range_exchange(
-    spark, df, input_path: str, *, chunk_rows: int, use_cache: bool
-):
+def _range_bounds(indexed, n_parts: int) -> list[bytes]:
+    """Exact weighted ``n_parts``-quantiles of the framing pass's script
+    prefix samples, deduplicated (skewed corpora can repeat boundaries,
+    so the bucket count adapts). Each file's sample is thinned to the
+    stride of the whole input and weighted by the rows each kept prefix
+    stands for, so shards count in proportion to their rows and the
+    driver sorts about SAMPLE_ROWS prefixes at any input size."""
+    stride = sample_stride(sum(ix.header.num_utxos for _, ix in indexed))
+    weighted = []
+    for _, ix in indexed:
+        keep = max(1, round(stride / ix.sample_stride))
+        weight = ix.sample_stride * keep
+        step = PREFIX_LEN * keep
+        weighted += [(ix.sample[i : i + PREFIX_LEN], weight) for i in range(0, len(ix.sample), step)]
+    if not weighted:
+        return []
+    weighted.sort()
+    cum = list(itertools.accumulate(w for _, w in weighted))
+    picks = {bisect.bisect_left(cum, cum[-1] * i / n_parts) for i in range(1, n_parts)}
+    return sorted({weighted[j][0] for j in picks})
+
+
+def _sampled_range_exchange(spark, df, indexed, num_utxos: int):
     """Range-cluster ``df`` on ``script`` without repartitionByRange's
-    child-plan re-execution: boundaries from a systematic split sample,
-    routing via one hash exchange on per-bucket preimage literals."""
+    child-plan re-execution: boundaries from the framing pass's prefix
+    sample, routing via one hash exchange on per-bucket preimage literals."""
     from pyspark.sql import functions as F
 
-    header, sample = read_utxo_dump_with_header(
-        spark,
-        input_path,
-        chunk_rows=chunk_rows,
-        use_cache=use_cache,
-        split_stride=SAMPLE_STRIDE,
-    )
     n_parts = max(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
-        -(-header.num_utxos // BUCKET_ROWS),
+        -(-num_utxos // BUCKET_ROWS),
     )
-    probs = [i / n_parts for i in range(1, n_parts)]
-    bounds = sample.select(
-        _script_prefix56(F.col("script")).alias("p")
-    ).approxQuantile("p", probs, 0.001)
-    # dedupe (skewed corpora can repeat boundaries); bucket count adapts
-    bounds = sorted({int(b) for b in bounds})
+    bounds = _range_bounds(indexed, n_parts)
     n_buckets = len(bounds) + 1
     magic = _hash_preimages(spark, n_buckets)
-    # Route on RAW BINARY comparisons, not the integer prefix image:
-    # routing only needs a split that is MONOTONE in the sort key (any
-    # consistent cut gives disjoint per-file script ranges — footer
-    # min/max always reflect the actual values), so the quantile
-    # integers convert back to 7-byte boundary literals and each row
-    # pays one JVM lambda over n_buckets byte-compares. The previous
-    # form evaluated hex+rpad+conv (two string allocations and a
-    # base-16 parse) per row plus a 31-term comparison sum — measured
-    # 40% of the whole exchange's map-side CPU at 20M rows.
-    bbytes = [int(b).to_bytes(7, "big") for b in bounds]
-    barr = F.array(*[F.lit(b) for b in bbytes])
+    # Route on raw binary comparisons: routing only needs a split that
+    # is monotone in the sort key (any consistent cut gives disjoint
+    # per-file script ranges — footer min/max always reflect the actual
+    # values), so each row pays one JVM lambda over n_buckets
+    # byte-compares against the 7-byte boundary literals.
+    barr = F.array(*[F.lit(b) for b in bounds])
     bucket = F.size(F.filter(barr, lambda b: F.col("script") >= b))
     route = F.element_at(F.array(*[F.lit(m) for m in magic]), bucket + 1)
     return (
@@ -153,12 +141,13 @@ def convert_utxo_dump_to_parquet(
     and this source's child plan is the full Arrow decode — so the
     built-in range exchange pays ~2 decodes plus the shuffle (measured
     4x per-partition cost at mainnet depth, BENCH_mainnet_lookup.json).
-    The sampled mode instead estimates script-prefix boundaries from a
-    systematic sample of decode splits (``split_stride`` — the framing
-    index is already cached, so the sample re-reads ~2% of the bytes),
-    then routes rows to their range bucket through ONE ordinary hash
-    exchange using per-bucket hash preimages, and sorts within
-    partitions. Files cover disjoint script-prefix ranges exactly as
+    The sampled mode instead takes exact quantiles of the script-prefix
+    sample the framing pass already collects (a fixed-size systematic
+    sample, so the cost stays bounded at any input size and no row is
+    decoded for it), then routes rows to their range bucket through ONE
+    ordinary hash exchange using per-bucket hash preimages, and sorts
+    within partitions. Each record is decoded once, on the exchange's
+    map side. Files cover disjoint script-prefix ranges exactly as
     with the true range exchange (footer min/max pruning behaves
     identically); only the *within-partition placement of equal
     prefixes* can differ, which no page-pruning path observes.
@@ -176,9 +165,8 @@ def convert_utxo_dump_to_parquet(
     and txids are high-entropy hashes that no zstd level compresses
     further, so the extra search effort of level 3 buys nothing here.
     """
-    header, df = read_utxo_dump_with_header(
-        spark, input_path, chunk_rows=chunk_rows, use_cache=use_cache
-    )
+    indexed = frame_dump_files(input_path, chunk_rows=chunk_rows, use_cache=use_cache)
+    header, df = decode_frames(spark, indexed)
     from pyspark.sql import functions as F
 
     partition_cols: list[str] = []
@@ -192,13 +180,7 @@ def convert_utxo_dump_to_parquet(
     # sort-by-partition-cols, destroying the script clustering
     sort_cols = partition_cols + ["script"]
     if global_sort == "sampled" and not partition_cols:
-        df = _sampled_range_exchange(
-            spark,
-            df,
-            input_path,
-            chunk_rows=chunk_rows,
-            use_cache=use_cache,
-        )
+        df = _sampled_range_exchange(spark, df, indexed, header.num_utxos)
     elif global_sort:
         df = df.repartitionByRange(*sort_cols).sortWithinPartitions(*sort_cols)
     else:

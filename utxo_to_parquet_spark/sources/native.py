@@ -5,6 +5,8 @@ Two kernels, both with pure-Python fallbacks in sources/utxo_dump.py:
 - ``frame_scan``: the sequential framing pass — the one part of the
   pipeline Spark cannot parallelize, so its per-record cost bounds
   end-to-end conversion throughput. ~40x the inlined CPython loop.
+  It also records the script-prefix sample the sampled global sort
+  takes its range boundaries from.
 - ``decode_scan``: the per-split full decode run by executor tasks. It
   fills Arrow-ready buffers directly (int64 numerics, fixed-width
   64-char txid hex with its own offsets implied, cumulative int32
@@ -19,6 +21,8 @@ Two kernels, both with pure-Python fallbacks in sources/utxo_dump.py:
 Build strategy: compile once with the system C compiler into a cached
 shared object; on ANY failure (no compiler, sandboxed exec, ...) callers
 fall back to the Python loop. No third-party packages involved.
+``tools/check_native_sanitize.py`` replays truncated and malformed dumps
+through both kernels built with ASan and UBSan.
 """
 
 from __future__ import annotations
@@ -30,74 +34,105 @@ import subprocess
 import tempfile
 
 _C_SOURCE = r"""
+#include <limits.h>
 #include <stdint.h>
+
+/* CompactSize at *pos. Returns 0, or -1 if it runs past size. */
+static int compact_size(const uint8_t *data, long size, long *pos, uint64_t *v)
+{
+    long p = *pos;
+    if (p >= size) return -1;
+    uint8_t b0 = data[p];
+    int w = (b0 < 0xFD) ? 0 : (b0 == 0xFD) ? 2 : (b0 == 0xFE) ? 4 : 8;
+    if (w == 0) { *v = b0; *pos = p + 1; return 0; }
+    if (p + 1 + w > size) return -1;
+    uint64_t x = 0;
+    for (int k = w; k >= 1; k--) x = (x << 8) | data[p + k];
+    *v = x;
+    *pos = p + 1 + w;
+    return 0;
+}
+
+/* Bitcoin Core varint at *pos (main.rs:45-59). Returns 0, or -1 if it
+ * runs past size. */
+static int core_varint(const uint8_t *data, long size, long *pos, uint64_t *v)
+{
+    uint64_t x = 0;
+    for (long p = *pos;;) {
+        if (p >= size) return -1;
+        uint8_t b = data[p++];
+        x = (x << 7) | (b & 0x7F);
+        if (b & 0x80) x += 1;
+        else { *v = x; *pos = p; return 0; }
+    }
+}
+
+/* Decoded-script head of compression types 0-5 (main.rs:109-161). */
+static const uint8_t TEMPLATE_HEAD[6][3] = {
+    {0x76, 0xA9, 0x14}, {0xA9, 0x14}, {0x21, 0x02}, {0x21, 0x03}, {0x41, 0x04}, {0x41, 0x04}};
+static const int TEMPLATE_HEAD_LEN[6] = {3, 2, 2, 2, 2, 2};
+
+/* First 7 bytes of the decoded script, zero-padded, from its compressed
+ * form: the template head plus payload bytes, no decompression. */
+static void script_prefix(const uint8_t *payload, uint64_t stype, uint64_t plen,
+                          uint8_t *dst)
+{
+    int h = 0;
+    if (stype < 6) {
+        h = TEMPLATE_HEAD_LEN[stype];
+        for (int k = 0; k < h; k++) dst[k] = TEMPLATE_HEAD[stype][k];
+    }
+    for (int k = h; k < 7; k++)
+        dst[k] = ((uint64_t)(k - h) < plen) ? payload[k - h] : 0;
+}
 
 /* Frame the run-length-grouped coin records of a dumptxoutset body.
  *
- * data/size: full file; scanning starts at *pos_io (absolute).
+ * data/size: full file; scanning starts at start (absolute).
  * n_records: coins to frame. chunk_rows: rows per split.
  * Outputs per split: absolute offset, absolute offset of the governing
  * txid, coins left in the current group at the split start, row count.
+ * Records 0, k, 2k, ... (k = sample_every) also write their script's
+ * 7-byte prefix to out_sample, ceil(n_records / k) prefixes in all.
  * Returns the number of splits, or a negative error code:
- *   -1 truncated, -2 zero-coin group, -3 split capacity exceeded.
+ *   -1 truncated, -2 zero-coin group, -3 split or sample capacity exceeded.
  */
 long frame_scan(const uint8_t *data, long size, long start,
                 long n_records, long chunk_rows,
                 long *out_off, long *out_txid_off, long *out_coins, long *out_rows,
-                long max_splits)
+                long max_splits,
+                long sample_every, uint8_t *out_sample, long max_samples)
 {
     long pos = start;
     long coins_left = 0;
     long txid_off = -1;
-    long n_splits = 0;
+    long n_splits = 0, n_samples = 0, sample_wait = 1;
     long chunk_start = pos, chunk_txid = -1, chunk_coins = 0, chunk_seen = 0;
+    uint64_t v, stype;
 
     for (long i = 0; i < n_records; i++) {
         if (coins_left == 0) {
             if (pos + 33 > size) return -1;
             txid_off = pos;
             pos += 32;
-            uint8_t b0 = data[pos];
-            if (b0 < 0xFD) { coins_left = b0; pos += 1; }
-            else if (b0 == 0xFD) {
-                if (pos + 3 > size) return -1;
-                coins_left = (long)data[pos+1] | ((long)data[pos+2] << 8);
-                pos += 3;
-            } else if (b0 == 0xFE) {
-                if (pos + 5 > size) return -1;
-                coins_left = (long)data[pos+1] | ((long)data[pos+2] << 8)
-                           | ((long)data[pos+3] << 16) | ((long)data[pos+4] << 24);
-                pos += 5;
-            } else {
-                if (pos + 9 > size) return -1;
-                coins_left = 0;
-                for (int k = 7; k >= 0; k--)
-                    coins_left = (coins_left << 8) | (long)data[pos+1+k];
-                pos += 9;
-            }
-            if (coins_left <= 0) return -2;
+            if (compact_size(data, size, &pos, &v)) return -1;
+            if (v == 0 || v > LONG_MAX) return -2;
+            coins_left = (long)v;
         }
-        /* vout: consensus varint width from lead byte */
-        if (pos >= size) return -1;
-        uint8_t b0 = data[pos];
-        pos += (b0 < 0xFD) ? 1 : (b0 == 0xFD) ? 3 : (b0 == 0xFE) ? 5 : 9;
-        /* code + amount: core varints, skip to terminator */
-        while (pos < size && (data[pos] & 0x80)) pos++;
-        pos++;
-        while (pos < size && (data[pos] & 0x80)) pos++;
-        pos++;
-        /* script length: decode the value to skip the payload */
-        if (pos >= size) return -1;
-        unsigned long slen = 0;
-        for (;;) {
-            if (pos >= size) return -1;
-            uint8_t b = data[pos++];
-            slen = (slen << 7) | (b & 0x7F);
-            if (b & 0x80) slen += 1; else break;
+        /* vout, code, amount: skipped; script type: sizes the payload */
+        if (compact_size(data, size, &pos, &v)) return -1;
+        if (core_varint(data, size, &pos, &v)) return -1;
+        if (core_varint(data, size, &pos, &v)) return -1;
+        if (core_varint(data, size, &pos, &stype)) return -1;
+        uint64_t plen = (stype < 6) ? ((stype < 2) ? 20 : 32) : stype - 6;
+        if (plen > (uint64_t)(size - pos)) return -1;
+        if (--sample_wait == 0) {
+            if (n_samples >= max_samples) return -3;
+            script_prefix(data + pos, stype, plen, out_sample + 7 * n_samples);
+            n_samples++;
+            sample_wait = sample_every;
         }
-        if (slen < 6) pos += (slen < 2) ? 20 : 32;
-        else pos += slen - 6;
-        if (pos > size) return -1;
+        pos += (long)plen;
 
         coins_left--;
         chunk_seen++;
@@ -173,80 +208,27 @@ long decode_scan(const uint8_t *data, long size, long start,
     script_off[0] = 0;
 
     for (long i = 0; i < n_records; i++) {
+        uint64_t v, code, amt, slen;
         if (coins_left == 0) {
             if (pos + 33 > size) return -1;
             txid_hex(data + pos, cur_hex);
             pos += 32;
-            uint8_t b0 = data[pos];
-            if (b0 < 0xFD) { coins_left = b0; pos += 1; }
-            else if (b0 == 0xFD) {
-                if (pos + 3 > size) return -1;
-                coins_left = (long)data[pos+1] | ((long)data[pos+2] << 8);
-                pos += 3;
-            } else if (b0 == 0xFE) {
-                if (pos + 5 > size) return -1;
-                coins_left = (long)data[pos+1] | ((long)data[pos+2] << 8)
-                           | ((long)data[pos+3] << 16) | ((long)data[pos+4] << 24);
-                pos += 5;
-            } else {
-                if (pos + 9 > size) return -1;
-                coins_left = 0;
-                for (int k = 7; k >= 0; k--)
-                    coins_left = (coins_left << 8) | (long)data[pos+1+k];
-                pos += 9;
-            }
-            if (coins_left <= 0) return -2;
+            if (compact_size(data, size, &pos, &v)) return -1;
+            if (v == 0 || v > LONG_MAX) return -2;
+            coins_left = (long)v;
         }
         for (int k = 0; k < 64; k++) txhex[i*64 + k] = cur_hex[k];
 
-        /* vout: consensus varint */
-        if (pos >= size) return -1;
-        uint8_t b0 = data[pos];
-        uint64_t v;
-        if (b0 < 0xFD) { v = b0; pos += 1; }
-        else if (b0 == 0xFD) {
-            if (pos + 3 > size) return -1;
-            v = (uint64_t)data[pos+1] | ((uint64_t)data[pos+2] << 8);
-            pos += 3;
-        } else if (b0 == 0xFE) {
-            if (pos + 5 > size) return -1;
-            v = (uint64_t)data[pos+1] | ((uint64_t)data[pos+2] << 8)
-              | ((uint64_t)data[pos+3] << 16) | ((uint64_t)data[pos+4] << 24);
-            pos += 5;
-        } else {
-            if (pos + 9 > size) return -1;
-            v = 0;
-            for (int k = 7; k >= 0; k--) v = (v << 8) | (uint64_t)data[pos+1+k];
-            pos += 9;
-        }
+        if (compact_size(data, size, &pos, &v)) return -1;
         vout[i] = (int64_t)v;
-
-        /* code + amount: Bitcoin Core varints (main.rs:45-59) */
-        uint64_t code = 0, amt = 0;
-        for (;;) {
-            if (pos >= size) return -1;
-            uint8_t b = data[pos++];
-            code = (code << 7) | (b & 0x7F);
-            if (b & 0x80) code += 1; else break;
-        }
-        for (;;) {
-            if (pos >= size) return -1;
-            uint8_t b = data[pos++];
-            amt = (amt << 7) | (b & 0x7F);
-            if (b & 0x80) amt += 1; else break;
-        }
+        if (core_varint(data, size, &pos, &code)) return -1;
+        if (core_varint(data, size, &pos, &amt)) return -1;
         height[i] = (int64_t)(code >> 1);
         coinbase[i] = (uint8_t)(code & 1);
         amount[i] = decompress_amount(amt);
 
         /* script: compressed special forms or raw (main.rs:109-161) */
-        uint64_t slen = 0;
-        for (;;) {
-            if (pos >= size) return -1;
-            uint8_t b = data[pos++];
-            slen = (slen << 7) | (b & 0x7F);
-            if (b & 0x80) slen += 1; else break;
-        }
+        if (core_varint(data, size, &pos, &slen)) return -1;
         uint8_t *dst = script_buf + so;
         if (slen == 0) {                       /* P2PKH */
             if (pos + 20 > size) return -1;
@@ -281,8 +263,8 @@ long decode_scan(const uint8_t *data, long size, long start,
             n_exc++;
             pos += 32; so += 67;
         } else {                               /* raw script of slen-6 bytes */
-            long raw = (long)slen - 6;
-            if (pos + raw > size) return -1;
+            if (slen - 6 > (uint64_t)(size - pos)) return -1;
+            long raw = (long)(slen - 6);
             if (so + raw > script_cap) return -4;
             for (long k = 0; k < raw; k++) dst[k] = data[pos+k];
             pos += raw; so += raw;
@@ -334,6 +316,9 @@ def _build() -> "ctypes.CDLL | None":
         ctypes.POINTER(ctypes.c_long),
         ctypes.POINTER(ctypes.c_long),
         ctypes.c_long,
+        ctypes.c_long,  # sample_every
+        ctypes.POINTER(ctypes.c_uint8),  # out_sample
+        ctypes.c_long,  # max_samples
     ]
     lib.decode_scan.restype = ctypes.c_long
     lib.decode_scan.argtypes = [
@@ -369,12 +354,14 @@ def get_native_framer():
     return _lib
 
 
-def frame_scan_native(path: str, start: int, n_records: int, chunk_rows: int):
+def frame_scan_native(path: str, start: int, n_records: int, chunk_rows: int, sample_every: int):
     """mmap the file and run the C framing loop.
 
-    Returns (splits as list of (offset, txid_bytes, coins_left, rows)),
-    or None if the native kernel is unavailable. Raises ValueError for
-    malformed input, matching the Python framer.
+    Returns ``(splits, sample)``: the splits as a list of
+    (offset, txid_bytes, coins_left, rows), and the 7-byte script
+    prefixes of records 0, k, 2k, ... (k = ``sample_every``)
+    concatenated; or None if the native kernel is unavailable. Raises
+    ValueError for malformed input, matching the Python framer.
     """
     import mmap
 
@@ -393,9 +380,12 @@ def frame_scan_native(path: str, start: int, n_records: int, chunk_rows: int):
             txo = (ctypes.c_long * max_splits)()
             coins = (ctypes.c_long * max_splits)()
             rows = (ctypes.c_long * max_splits)()
+            n_samples = -(-n_records // sample_every)
+            sample = (ctypes.c_uint8 * (7 * n_samples))()
             c_data = (ctypes.c_uint8 * size).from_buffer(mm)
             n = lib.frame_scan(
-                c_data, size, start, n_records, chunk_rows, off, txo, coins, rows, max_splits
+                c_data, size, start, n_records, chunk_rows, off, txo, coins, rows, max_splits,
+                sample_every, sample, n_samples,
             )
             if n == -1:
                 raise ValueError("truncated dump: framing ran past EOF")
@@ -407,7 +397,7 @@ def frame_scan_native(path: str, start: int, n_records: int, chunk_rows: int):
             for k in range(n):
                 txid = mm[txo[k] : txo[k] + 32] if txo[k] >= 0 else b"\x00" * 32
                 out.append((off[k], txid, coins[k], rows[k]))
-            return out
+            return out, bytes(sample)
         finally:
             del c_data  # release the buffer view before closing the map
             mm.close()

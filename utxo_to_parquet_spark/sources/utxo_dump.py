@@ -14,7 +14,9 @@ This module makes the scan *splittable* with a two-pass design
    no hex rendering — and emit split descriptors
    ``(byte_offset, carried_txid, carried_coins_left, num_rows)`` every
    ``chunk_rows`` records. O(total bytes) but ~10× cheaper per record
-   than a full decode.
+   than a full decode. It also samples the 7-byte script prefix of
+   every k-th record, which the sampled global sort (convert.py) takes
+   its range boundaries from.
 2. **Decode pass** (parallel, executors): each task seeks to its offset,
    restores the carried run-length state, fully decodes its ``num_rows``
    records, and yields Arrow RecordBatches via ``mapInArrow``.
@@ -130,22 +132,49 @@ def write_utxo_dump(
 # pass 1: framing scan → splits
 # ---------------------------------------------------------------------------
 
-# worst-case framing bytes before the script payload:
-# txid(32) + count(<=9) + vout(<=9) + code(<=10) + amount(<=10) + len(<=10)
-_FRAME_MARGIN = 80
+# worst-case framing bytes before the script payload, plus the payload
+# bytes the sample reads:
+# txid(32) + count(<=9) + vout(<=9) + code(<=10) + amount(<=10) + len(<=10) + 7
+_FRAME_MARGIN = 87
+
+# size of the framing pass's systematic sample of script prefixes, from
+# which the sampled global sort takes its range boundaries (convert.py):
+# every k-th record with k = ceil(rows / SAMPLE_ROWS), so the sample stays
+# bounded at any input size
+SAMPLE_ROWS = 32_768
+PREFIX_LEN = 7
+# decoded-script head of compression types 0-5 (kernels/script.py)
+_TEMPLATE_HEADS = (b"\x76\xa9\x14", b"\xa9\x14", b"\x21\x02", b"\x21\x03", b"\x41\x04", b"\x41\x04")
+
+
+@dataclass(frozen=True)
+class DumpIndex:
+    """What the framing pass learns about one snapshot file."""
+
+    header: UtxoHeader
+    splits: list[Split]
+    sample_stride: int  # records 0, k, 2k, ... are sampled
+    # their scripts' first PREFIX_LEN bytes, zero-padded, concatenated
+    sample: bytes
+
+
+def sample_stride(n: int) -> int:
+    """The stride k that keeps an n-row sample within SAMPLE_ROWS."""
+    return max(1, -(-n // SAMPLE_ROWS))
 
 
 def _index_cache_path(path: str) -> str:
     return path + ".splits.json"
 
 
-def _load_split_cache(path: str, chunk_rows: int) -> "tuple[UtxoHeader, list[Split]] | None":
+def _load_split_cache(path: str, chunk_rows: int) -> "DumpIndex | None":
     """Reuse a sidecar split index if it matches the file identity.
 
     The framing pass is the one sequential stage (Amdahl's bound on the
     whole conversion at large inputs), but it's a pure function of the
     file bytes — so it is computed once and persisted next to the input.
-    Validity = (size, mtime_ns, chunk_rows) all match.
+    Validity = (size, mtime_ns, chunk_rows, SAMPLE_ROWS) all match; a
+    sidecar without a sample is a miss.
     """
     import json
 
@@ -158,6 +187,7 @@ def _load_split_cache(path: str, chunk_rows: int) -> "tuple[UtxoHeader, list[Spl
             doc["size"] != st.st_size
             or doc["mtime_ns"] != st.st_mtime_ns
             or doc["chunk_rows"] != chunk_rows
+            or doc["sample_rows"] != SAMPLE_ROWS
         ):
             return None
         with open(path, "rb") as fh:
@@ -165,12 +195,16 @@ def _load_split_cache(path: str, chunk_rows: int) -> "tuple[UtxoHeader, list[Spl
         splits = [
             Split(o, bytes.fromhex(t), c, r) for o, t, c, r in doc["splits"]
         ]
-        return header, splits
-    except (OSError, KeyError, ValueError):
+        stride = doc["sample_stride"]
+        sample = bytes.fromhex(doc["sample"])
+        if len(sample) != PREFIX_LEN * -(-header.num_utxos // stride):
+            return None
+        return DumpIndex(header, splits, stride, sample)
+    except (OSError, KeyError, ValueError, TypeError, ZeroDivisionError):
         return None
 
 
-def _store_split_cache(path: str, chunk_rows: int, splits: list[Split]) -> None:
+def _store_split_cache(path: str, chunk_rows: int, index: DumpIndex) -> None:
     import json
 
     try:
@@ -179,10 +213,13 @@ def _store_split_cache(path: str, chunk_rows: int, splits: list[Split]) -> None:
             "size": st.st_size,
             "mtime_ns": st.st_mtime_ns,
             "chunk_rows": chunk_rows,
+            "sample_rows": SAMPLE_ROWS,
+            "sample_stride": index.sample_stride,
             "splits": [
                 (s.offset, s.carried_txid.hex(), s.carried_coins_left, s.num_rows)
-                for s in splits
+                for s in index.splits
             ],
+            "sample": index.sample.hex(),
         }
         tmp = _index_cache_path(path) + ".tmp"
         with open(tmp, "w") as fh:
@@ -198,6 +235,17 @@ def index_utxo_dump(
     window_bytes: int = 64 * 1024 * 1024,
     use_cache: bool = True,
 ) -> tuple[UtxoHeader, list[Split]]:
+    """The header and decode splits of :func:`frame_utxo_dump`."""
+    index = frame_utxo_dump(path, chunk_rows, window_bytes, use_cache)
+    return index.header, index.splits
+
+
+def frame_utxo_dump(
+    path: str,
+    chunk_rows: int = 250_000,
+    window_bytes: int = 64 * 1024 * 1024,
+    use_cache: bool = True,
+) -> DumpIndex:
     """Walk record framing sequentially and emit decode splits.
 
     Only lengths are examined — scripts are skipped, amounts/heights are
@@ -207,10 +255,16 @@ def index_utxo_dump(
     at this granularity; measured ~800k records/s/core in CPython).
     Windows keep driver memory O(window) regardless of file size.
 
+    On the way it takes a systematic sample of every k-th record's
+    script prefix (k = ceil(rows / SAMPLE_ROWS)): the first PREFIX_LEN
+    bytes of the decoded script, zero-padded, built from the compression
+    type and the payload bytes the walk steps over, with no
+    decompression.
+
     Raises ValueError on malformed input (bad magic, zero-coin group,
     truncation), mirroring the reference's asserts (main.rs:174,225).
 
-    With ``use_cache`` (default), the split index is persisted to a
+    With ``use_cache`` (default), the index is persisted to a
     ``<path>.splits.json`` sidecar and reused while the file identity
     (size + mtime) matches — repeat reads skip the sequential pass
     entirely.
@@ -225,28 +279,33 @@ def index_utxo_dump(
     try:
         header = parse_header(memoryview(f.read(HEADER_LEN)))
         n = header.num_utxos
+        stride = sample_stride(n)
 
         # the C kernel (sources/native.py) runs the same loop ~40x faster;
         # fall through to the Python loop when no compiler is available
         from .native import frame_scan_native
 
         try:
-            native = frame_scan_native(path, HEADER_LEN, n, chunk_rows)
+            native = frame_scan_native(path, HEADER_LEN, n, chunk_rows, stride)
         except ValueError:
             raise
         except Exception:
             native = None
         if native is not None:
-            splits = [Split(o, t, c, r) for o, t, c, r in native]
+            index = DumpIndex(
+                header, [Split(o, t, c, r) for o, t, c, r in native[0]], stride, native[1]
+            )
             if use_cache:
-                _store_split_cache(path, chunk_rows, splits)
-            return header, splits
+                _store_split_cache(path, chunk_rows, index)
+            return index
 
         win_start = HEADER_LEN
         data = f.read(window_bytes)
         win_len = len(data)
 
         splits: list[Split] = []
+        sample = bytearray()
+        sample_wait = 1
         pos = 0  # relative to win_start
         coins_left = 0
         cur_txid = b"\x00" * 32
@@ -315,10 +374,20 @@ def index_utxo_dump(
                         slen += 1
                     else:
                         break
-                pos += (20 if slen < 2 else 32) if slen < SPECIAL_SCRIPTS else slen - SPECIAL_SCRIPTS
-
-                if win_start + pos > file_size:
+                if slen < SPECIAL_SCRIPTS:
+                    plen = 20 if slen < 2 else 32
+                else:
+                    plen = slen - SPECIAL_SCRIPTS
+                if win_start + pos + plen > file_size:
                     raise ValueError("truncated dump: record payload past EOF")
+                sample_wait -= 1
+                if sample_wait == 0:
+                    head = _TEMPLATE_HEADS[slen] if slen < SPECIAL_SCRIPTS else b""
+                    take = min(PREFIX_LEN - len(head), plen)
+                    sample += (head + data[pos : pos + take]).ljust(PREFIX_LEN, b"\x00")
+                    sample_wait = stride
+                pos += plen
+
                 coins_left -= 1
                 i += 1
                 chunk_rows_seen += 1
@@ -332,9 +401,10 @@ def index_utxo_dump(
                     chunk_rows_seen = 0
         except IndexError:
             raise ValueError("truncated dump: framing ran past EOF") from None
+        index = DumpIndex(header, splits, stride, bytes(sample))
         if use_cache:
-            _store_split_cache(path, chunk_rows, splits)
-        return header, splits
+            _store_split_cache(path, chunk_rows, index)
+        return index
     finally:
         f.close()
 
@@ -451,52 +521,54 @@ def read_utxo_dump_with_header(
     *,
     chunk_rows: int = 250_000,
     use_cache: bool = True,
-    split_stride: int = 1,
 ):
     """Like :func:`read_utxo_dump` but also returns the parsed snapshot
     header, so callers needing ``num_utxos`` don't re-run the framing
     pass (the one sequential stage).
 
     ``path`` may be a single snapshot, a directory of snapshot shards, or
-    a glob. Multi-file inputs frame in a thread pool — the C framing
+    a glob. The returned header carries the FIRST file's
+    version/network/block-hash and the SUM of rows across files.
+    """
+    return decode_frames(spark, frame_dump_files(path, chunk_rows=chunk_rows, use_cache=use_cache))
+
+
+def frame_dump_files(
+    path: str, *, chunk_rows: int = 250_000, use_cache: bool = True
+) -> list[tuple[str, DumpIndex]]:
+    """Frame every file of ``path`` (see :func:`read_utxo_dump_with_header`),
+    once each. Multi-file inputs frame in a thread pool — the C framing
     kernel releases the GIL inside ctypes, so per-file framing runs
     truly in parallel, removing the sequential-pass bound whenever the
-    input is sharded. The returned header carries the FIRST file's
-    version/network/block-hash and the SUM of rows across files.
-
-    ``split_stride=k`` decodes only every k-th split (each keeps its own
-    byte extent, so the sampled splits decode exactly as they would in
-    the full read) — the cheap systematic-sample pass the sampled
-    global-sort boundary estimation uses. The header still reports the
-    FULL row count.
-    """
+    input is sharded."""
     from concurrent.futures import ThreadPoolExecutor
 
     files = [os.path.abspath(f) for f in _list_dump_files(path)]
 
     def index_one(f):
-        return f, index_utxo_dump(f, chunk_rows=chunk_rows, use_cache=use_cache)
+        return f, frame_utxo_dump(f, chunk_rows=chunk_rows, use_cache=use_cache)
 
     if len(files) == 1:
-        indexed = [index_one(files[0])]
-    else:
-        with ThreadPoolExecutor(max_workers=min(len(files), 16)) as pool:
-            indexed = list(pool.map(index_one, files))
+        return [index_one(files[0])]
+    with ThreadPoolExecutor(max_workers=min(len(files), 16)) as pool:
+        return list(pool.map(index_one, files))
 
-    header = indexed[0][1][0]
-    total_rows = sum(h.num_utxos for _, (h, _) in indexed)
+
+def decode_frames(spark, indexed: list[tuple[str, DumpIndex]]):
+    """The combined header and the parallel decode DataFrame of framed
+    files (:func:`frame_dump_files`)."""
+    header = indexed[0][1].header
+    total_rows = sum(ix.header.num_utxos for _, ix in indexed)
     header = UtxoHeader(header.version, header.network, header.block_hash, total_rows)
 
     rows = []
-    for f, (_, splits) in indexed:
+    for f, ix in indexed:
         size = os.path.getsize(f)
-        ends = [s.offset for s in splits[1:]] + [size]
+        ends = [s.offset for s in ix.splits[1:]] + [size]
         rows.extend(
             (f, s.offset, end - s.offset, s.carried_txid, s.carried_coins_left, s.num_rows)
-            for s, end in zip(splits, ends)
+            for s, end in zip(ix.splits, ends)
         )
-    if split_stride > 1:
-        rows = rows[::split_stride]
     if not rows:  # empty-but-valid snapshot(s)
         return header, spark.createDataFrame([], UTXO_SCHEMA)
 
