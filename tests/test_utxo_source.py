@@ -45,8 +45,8 @@ def test_empty_snapshot(tmp_path, spark):
 
     path = str(tmp_path / "empty.dump")
     write_utxo_dump(path, [])
-    header, splits = index_utxo_dump(path)
-    assert header.num_utxos == 0 and splits == []
+    ix = index_utxo_dump(path)
+    assert ix.header.num_utxos == 0 and ix.splits == []
     assert read_utxo_dump(spark, path).count() == 0
     # no sample, so no boundaries: a sampled convert writes one empty bucket
     assert _range_bounds(frame_dump_files(path), 8) == []
@@ -69,10 +69,10 @@ def test_run_length_groups_and_split_boundaries(tmp_path, spark):
     rows = synthetic_utxo_rows(1000, seed=3)
     path = str(tmp_path / "groups.dump")
     write_utxo_dump(path, rows)
-    header, splits = index_utxo_dump(path, chunk_rows=37)
-    assert header.num_utxos == 1000
-    assert sum(s.num_rows for s in splits) == 1000
-    assert len(splits) == (1000 + 36) // 37
+    ix = index_utxo_dump(path, chunk_rows=37)
+    assert ix.header.num_utxos == 1000
+    assert sum(s.num_rows for s in ix.splits) == 1000
+    assert len(ix.splits) == (1000 + 36) // 37
     df = read_utxo_dump(spark, path, chunk_rows=37)
     assert spark_table(df) == expected_table(rows)
 
@@ -147,36 +147,39 @@ def test_end_to_end_convert_and_flagship_query(tmp_path, spark):
     assert "PushedFilters: [IsNotNull(script), EqualTo(script" in plan
 
 
+def _native_batch(ext):
+    """Decode one split extent with the C kernel itself, so that any
+    failure on the C side fails the test rather than reaching the Python
+    loop."""
+    from utxo_to_parquet_spark.sources import native
+
+    with open(ext.path, "rb") as f:
+        f.seek(ext.offset)
+        data = f.read(ext.length)
+    rb = native.decode_split_native(data, ext.carried_txid, ext.carried_coins_left, ext.num_rows)
+    assert rb is not None
+    return rb
+
+
 def test_native_decode_matches_python_fallback(tmp_path, monkeypatch):
     """The C decode kernel and the pure-Python loop must produce
     byte-identical RecordBatches over every script type and run-length
     shape (same differential idea as the driver's oracle gate)."""
-    from utxo_to_parquet_spark.sources import native, utxo_dump
-    from utxo_to_parquet_spark.sources.utxo_dump import _decode_split, Split
+    from utxo_to_parquet_spark.sources import native
+    from utxo_to_parquet_spark.sources.utxo_dump import frame_dump_files, read_split, split_extents
 
+    if native.get_native_framer() is None:
+        pytest.skip("no C compiler available")
     path = str(tmp_path / "parity.dump")
     rows = synthetic_utxo_rows(5_000, seed=99)
     write_utxo_dump(path, rows)
-    _, splits = index_utxo_dump(path, chunk_rows=1_234)
-    import os
-
-    size = os.path.getsize(path)
-    ends = [s.offset for s in splits[1:]] + [size]
-    with open(path, "rb") as f:
-        for s, end in zip(splits, ends):
-            f.seek(s.offset)
-            data = f.read(end - s.offset)
-            rel = Split(0, s.carried_txid, s.carried_coins_left, s.num_rows)
-            rb_native = native.decode_split_native(
-                data, s.carried_txid, s.carried_coins_left, s.num_rows
-            )
-            if rb_native is None:
-                pytest.skip("no C compiler available")
-            monkeypatch.setattr(native, "decode_split_native", lambda *a, **k: None)
-            rb_py = _decode_split(data, rel)
-            monkeypatch.undo()
-            assert rb_native.schema == rb_py.schema
-            assert rb_native.to_pylist() == rb_py.to_pylist()
+    for ext in split_extents(frame_dump_files(path, chunk_rows=1_234)):
+        rb_native = _native_batch(ext)
+        with monkeypatch.context() as m:
+            m.setattr(native, "decode_split_native", lambda *a, **k: None)
+            rb_py = read_split(ext)
+        assert rb_native.schema == rb_py.schema
+        assert rb_native.to_pylist() == rb_py.to_pylist()
 
 
 def test_cli_convert(tmp_path, spark):
@@ -196,7 +199,8 @@ def test_cli_convert(tmp_path, spark):
 
 def test_datasource_format(tmp_path, spark):
     """spark.read.format("utxo_dump") — the Spark 4 Python DataSource
-    registration path must decode identically to read_utxo_dump."""
+    registration path must decode identically to read_utxo_dump, on one
+    file, on a directory of shards and on an empty snapshot."""
     from utxo_to_parquet_spark.sources import register_utxo_datasource
 
     register_utxo_datasource(spark)
@@ -211,6 +215,22 @@ def test_datasource_format(tmp_path, spark):
     assert df.rdd.getNumPartitions() == (1_500 + 399) // 400
     assert spark_table(df) == expected_table(rows)
 
+    shard_dir = tmp_path / "shards"
+    shard_dir.mkdir()
+    write_utxo_dump(str(shard_dir / "a.dump"), rows[:600])
+    write_utxo_dump(str(shard_dir / "b.dump"), rows[600:])
+    empty = str(tmp_path / "empty.dump")
+    write_utxo_dump(empty, [])
+    for p, n_rows in ((str(shard_dir), 1_500), (empty, 0)):
+        df = spark.read.format("utxo_dump").option("chunk_rows", 400).load(p)
+        got = spark_table(df)
+        assert len(got) == n_rows
+        assert got == spark_table(read_utxo_dump(spark, p, chunk_rows=400))
+    # 600 and 900 rows: 2 + 3 splits of at most 400
+    assert spark.read.format("utxo_dump").option("chunk_rows", 400).load(
+        str(shard_dir)
+    ).rdd.getNumPartitions() == 5
+
 
 def test_native_decode_parity_property(tmp_path):
     """Property-based differential: random row shapes (hypothesis
@@ -221,7 +241,6 @@ def test_native_decode_parity_property(tmp_path):
 
     from utxo_to_parquet_spark.sources import native
     from utxo_to_parquet_spark.sources import utxo_dump as ud
-    from utxo_to_parquet_spark.sources.utxo_dump import Split
 
     if native.get_native_framer() is None:
         pytest.skip("no C compiler available")
@@ -274,36 +293,24 @@ def test_native_decode_parity_property(tmp_path):
         orig_rows, orig_framer = ud.SAMPLE_ROWS, native.frame_scan_native
         ud.SAMPLE_ROWS = sample_rows  # strides > 1 on these small dumps
         try:
-            ix = ud.frame_utxo_dump(path, chunk_rows=chunk_rows, use_cache=False)
+            ix = ud.index_utxo_dump(path, chunk_rows=chunk_rows, use_cache=False)
             native.frame_scan_native = lambda *a, **k: None  # the Python framer
-            ix_py = ud.frame_utxo_dump(path, chunk_rows=chunk_rows, use_cache=False)
+            ix_py = ud.index_utxo_dump(path, chunk_rows=chunk_rows, use_cache=False)
         finally:
             ud.SAMPLE_ROWS, native.frame_scan_native = orig_rows, orig_framer
         assert ix == ix_py  # C and Python framers: same splits, same sample
-        splits = ix.splits
-        import os
-
-        size = os.path.getsize(path)
-        ends = [s.offset for s in splits[1:]] + [size]
         decoded = []
-        with open(path, "rb") as f:
-            for s, end in zip(splits, ends):
-                f.seek(s.offset)
-                data = f.read(end - s.offset)
-                rb_native = native.decode_split_native(
-                    data, s.carried_txid, s.carried_coins_left, s.num_rows
-                )
-                # force the pure-Python path for the differential side
-                orig = native.decode_split_native
-                native.decode_split_native = lambda *a, **k: None
-                try:
-                    rb_py = ud._decode_split(
-                        data, Split(0, s.carried_txid, s.carried_coins_left, s.num_rows)
-                    )
-                finally:
-                    native.decode_split_native = orig
-                assert rb_native.to_pylist() == rb_py.to_pylist()
-                decoded += rb_py.column("script").to_pylist()
+        for ext in ud.split_extents([(path, ix)]):
+            rb_native = _native_batch(ext)
+            # force the pure-Python path for the differential side
+            orig = native.decode_split_native
+            native.decode_split_native = lambda *a, **k: None
+            try:
+                rb_py = ud.read_split(ext)
+            finally:
+                native.decode_split_native = orig
+            assert rb_native.to_pylist() == rb_py.to_pylist()
+            decoded += rb_py.column("script").to_pylist()
         # each sampled prefix is the head of the decoded script at its row
         heads = [bytes(sc[:7]).ljust(7, b"\x00") for sc in decoded[:: ix.sample_stride]]
         assert ix.sample == b"".join(heads)
@@ -339,18 +346,34 @@ def _check_range_layout(out, rows):
     return counts
 
 
-@pytest.mark.parametrize("global_sort", [True, "sampled"])
-def test_global_sort_produces_total_order(tmp_path, spark, global_sort):
-    """global_sort=True range-partitions by script, and "sampled" does
-    the same from the framing pass's prefix sample: files are disjoint
-    script ranges and concatenating them in range order yields one
-    global sorted order (the strictly-stronger layout of convert.py)."""
+@pytest.mark.parametrize("global_sort", [True, "sampled", "cli"])
+def test_global_sort_produces_total_order(tmp_path, spark, monkeypatch, global_sort):
+    """Every way to ask for a global sort (``True``, any truthy value such
+    as "sampled", the CLI's --global-sort) takes the one range exchange,
+    once, whose boundaries come from the framing pass's prefix sample:
+    files are disjoint script ranges and concatenating them in range
+    order yields one global sorted order."""
+    from utxo_to_parquet_spark.__main__ import main
+    from utxo_to_parquet_spark.sources import convert
+
+    calls = []
+    exchange = convert._sampled_range_exchange
+
+    def counting(*a, **k):
+        calls.append(1)
+        return exchange(*a, **k)
+
+    monkeypatch.setattr(convert, "_sampled_range_exchange", counting)
     rows = synthetic_utxo_rows(5_000, seed=21)
     dump = str(tmp_path / "gs.dump")
     out = str(tmp_path / "gs.parquet")
     write_utxo_dump(dump, rows)
-    n = convert_utxo_dump_to_parquet(spark, dump, out, chunk_rows=1_000, global_sort=global_sort)
-    assert n == 5_000
+    if global_sort == "cli":
+        main(["-i", dump, "-o", out, "--chunk-rows", "1000", "--global-sort"])
+    else:
+        n = convert_utxo_dump_to_parquet(spark, dump, out, chunk_rows=1_000, global_sort=global_sort)
+        assert n == 5_000
+    assert calls == [1]
     _check_range_layout(out, rows)
 
 
@@ -391,13 +414,13 @@ def test_sampled_convert_frames_once(tmp_path, spark, monkeypatch):
     from utxo_to_parquet_spark.sources import utxo_dump as ud
 
     calls = []
-    frame = ud.frame_utxo_dump
+    frame = ud.index_utxo_dump
 
     def counting(path, *a, **k):
         calls.append(path)
         return frame(path, *a, **k)
 
-    monkeypatch.setattr(ud, "frame_utxo_dump", counting)
+    monkeypatch.setattr(ud, "index_utxo_dump", counting)
     dump = str(tmp_path / "once.dump")
     write_utxo_dump(dump, synthetic_utxo_rows(3_000, seed=29))
     out = str(tmp_path / "once.parquet")
@@ -410,47 +433,71 @@ def test_sampled_convert_frames_once(tmp_path, spark, monkeypatch):
 
 def test_split_index_cache(tmp_path):
     """The sidecar split index skips the framing pass on repeat reads and
-    invalidates on file change or different chunk_rows."""
+    invalidates on file change, different chunk_rows, or content that
+    does not fit the file."""
     import json
     import os
+
+    from utxo_to_parquet_spark.sources.convert import _range_bounds
+    from utxo_to_parquet_spark.sources.utxo_dump import _split_digest
 
     rows = synthetic_utxo_rows(800, seed=13)
     path = str(tmp_path / "cache.dump")
     write_utxo_dump(path, rows)
-    h1, s1 = index_utxo_dump(path, chunk_rows=100)
+    ix1 = index_utxo_dump(path, chunk_rows=100)
     sidecar = path + ".splits.json"
     assert os.path.exists(sidecar)
-    h2, s2 = index_utxo_dump(path, chunk_rows=100)  # cache hit
-    assert s1 == s2
+    assert index_utxo_dump(path, chunk_rows=100) == ix1  # cache hit
     # different chunk_rows: must re-frame, not serve the stale layout
-    _, s3 = index_utxo_dump(path, chunk_rows=37)
-    assert len(s3) == (800 + 36) // 37
+    assert len(index_utxo_dump(path, chunk_rows=37).splits) == (800 + 36) // 37
     # file rewrite invalidates
     write_utxo_dump(path, synthetic_utxo_rows(900, seed=14))
     os.utime(path, ns=(1, 1))  # force distinct mtime even on coarse clocks
-    h4, s4 = index_utxo_dump(path, chunk_rows=37)
-    assert h4.num_utxos == 900 and sum(s.num_rows for s in s4) == 900
+    ix = index_utxo_dump(path, chunk_rows=37)
+    assert ix.header.num_utxos == 900 and sum(s.num_rows for s in ix.splits) == 900
+    with open(sidecar) as fh:
+        doc = json.load(fh)
+
+    def reframed(damaged: dict, seal: bool = True) -> None:
+        """A sidecar holding ``damaged`` is a miss: the file is framed
+        again and the sidecar rewritten. ``seal`` gives it a matching
+        digest, so the content checks, not the digest, must reject it."""
+        if seal:
+            damaged = {**damaged, "digest": _split_digest(damaged)}
+        with open(sidecar, "w") as fh:
+            json.dump(damaged, fh)
+        assert index_utxo_dump(path, chunk_rows=37) == ix
+        with open(sidecar) as fh:
+            assert json.load(fh) == doc
+
     # corrupt sidecar falls back to framing
     with open(sidecar, "w") as fh:
         fh.write("{not json")
-    h5, s5 = index_utxo_dump(path, chunk_rows=37)
-    assert sum(s.num_rows for s in s5) == 900
+    assert index_utxo_dump(path, chunk_rows=37) == ix
     # a sidecar without a sample (the format before the framing pass took
-    # one) is a miss too: the file is framed again, and the boundaries
-    # come from a full sample, never from an empty one
-    from utxo_to_parquet_spark.sources.convert import _range_bounds
-    from utxo_to_parquet_spark.sources.utxo_dump import frame_utxo_dump
-
-    ix = frame_utxo_dump(path, chunk_rows=37)
-    with open(sidecar) as fh:
-        doc = json.load(fh)
-    with open(sidecar, "w") as fh:
-        json.dump({k: doc[k] for k in ("size", "mtime_ns", "chunk_rows", "splits")}, fh)
-    assert frame_utxo_dump(path, chunk_rows=37) == ix
-    with open(sidecar) as fh:
-        assert json.load(fh)["sample"] == ix.sample.hex()  # rewritten
+    # one) is a miss too, so the boundaries come from a full sample,
+    # never from an empty one
+    reframed({k: doc[k] for k in ("size", "mtime_ns", "chunk_rows", "splits")}, seal=False)
     assert len(ix.sample) == 7 * 900
     assert len(_range_bounds([(path, ix)], 4)) == 3
+    # a truncated split list would decode fewer rows than the header counts
+    reframed({**doc, "splits": doc["splits"][:-1]})
+    # shifted offsets: off the end of the header, out of order, past EOF
+    size = os.path.getsize(path)
+    for k, offset in ((0, doc["splits"][0][0] + 1), (1, doc["splits"][2][0]), (-1, size)):
+        splits = [list(s) for s in doc["splits"]]
+        splits[k][0] = offset
+        reframed({**doc, "splits": splits})
+    # the first split starts a txid group: it carries no coins
+    splits = [list(s) for s in doc["splits"]]
+    splits[0][2] = 1
+    reframed({**doc, "splits": splits})
+    # an interior split edited so that the content checks still hold (an
+    # offset moved by one byte, a carried txid changed) fails the digest
+    for field, value in ((0, doc["splits"][1][0] + 1), (1, "ab" * 32)):
+        splits = [list(s) for s in doc["splits"]]
+        splits[1][field] = value
+        reframed({**doc, "splits": splits}, seal=False)
 
 
 def test_partitioned_output_prunes_height_ranges(tmp_path, spark):
@@ -524,9 +571,9 @@ def test_multi_file_dump_directory(tmp_path, spark):
         rows = synthetic_utxo_rows(700 + i * 100, seed=40 + i)
         write_utxo_dump(str(shard_dir / f"part{i}.dump"), rows)
         all_rows.extend(rows)
-    from utxo_to_parquet_spark.sources import read_utxo_dump_with_header
+    from utxo_to_parquet_spark.sources.utxo_dump import decode_frames, frame_dump_files
 
-    header, df = read_utxo_dump_with_header(spark, str(shard_dir), chunk_rows=300)
+    header, df = decode_frames(spark, frame_dump_files(str(shard_dir), chunk_rows=300))
     assert header.num_utxos == len(all_rows)
     assert spark_table(df) == expected_table(all_rows)
     # glob form reads the same
@@ -569,10 +616,10 @@ def test_multi_file_corrupt_shard_fails_loudly(tmp_path, spark):
     data = bytearray(bad.read_bytes())
     data[:5] = b"BOGUS"  # clobber the magic
     bad.write_bytes(bytes(data))
-    from utxo_to_parquet_spark.sources import read_utxo_dump_with_header
+    from utxo_to_parquet_spark.sources.utxo_dump import frame_dump_files
 
     with pytest.raises(ValueError):
-        read_utxo_dump_with_header(spark, str(shard_dir), chunk_rows=300)
+        frame_dump_files(str(shard_dir), chunk_rows=300)
 
 
 def test_partitioned_global_sort_combined(tmp_path, spark):
@@ -623,6 +670,154 @@ def test_truncated_compactsize_raises_at_parse_site(tmp_path, monkeypatch):
     monkeypatch.setattr(native, "frame_scan_native", lambda *a, **k: None)
     with pytest.raises(ValueError, match="truncated dump"):
         utxo_dump.index_utxo_dump(path, use_cache=False)
+
+
+@pytest.mark.parametrize("decoder", ["c", "python"])
+def test_out_of_range_values_raise(tmp_path, monkeypatch, decoder):
+    """A vout, height or amount that does not fit the signed 64-bit
+    schema is a ValueError naming the field, in both decoders; a group
+    count past 2^63-1 is one in both framers."""
+    from utxo_to_parquet_spark.kernels.amount import compress_amount
+    from utxo_to_parquet_spark.kernels.varint import write_core_varint
+    from utxo_to_parquet_spark.sources import native
+    from utxo_to_parquet_spark.sources.utxo_dump import frame_dump_files, read_split, split_extents
+
+    if decoder == "c" and native.get_native_framer() is None:
+        pytest.skip("no C compiler available")
+    if decoder == "python":
+        monkeypatch.setattr(native, "frame_scan_native", lambda *a, **k: None)
+        monkeypatch.setattr(native, "decode_split_native", lambda *a, **k: None)
+    zero, raw_empty = b"\x00", b"\x06"
+    cases = [
+        # the field the error names; the record's vout, code and amount
+        ("vout", b"\xff" * 9, zero, zero),
+        ("height", zero, write_core_varint(2**64), zero),  # code past 64 bits
+        ("amount", zero, zero, write_core_varint(compress_amount(93 * 10**17))),  # > 2^63-1
+        # a compressed amount past 64 bits, even one whose decompressed
+        # value would fit
+        ("amount", zero, zero, write_core_varint(2**64 + 5)),
+    ]
+    for field, vout, code, amount in cases:
+        path = str(tmp_path / "range.dump")
+        with open(path, "wb") as f:
+            f.write(build_header(1) + b"\x42" * 32 + b"\x01" + vout + code + amount + raw_empty)
+        (ext,) = split_extents(frame_dump_files(path, use_cache=False))
+        with pytest.raises(ValueError, match=f"{field} out of range"):
+            _native_batch(ext) if decoder == "c" else read_split(ext)
+    path = str(tmp_path / "count.dump")
+    with open(path, "wb") as f:
+        f.write(build_header(1) + b"\x42" * 32 + b"\xff" + (2**63).to_bytes(8, "little") + b"\x00\x00\x00\x06")
+    with pytest.raises(ValueError, match="coin count out of range"):
+        frame_dump_files(path, use_cache=False)
+
+
+def _every_type_dump(path: str) -> list[int]:
+    """Write a valid dump holding every script compression type, in one-
+    and three-coin groups, and return the offsets of its script-size codes."""
+    from utxo_to_parquet_spark.kernels.header import HEADER_LEN
+    from utxo_to_parquet_spark.kernels.script import decode_script
+    from utxo_to_parquet_spark.kernels.varint import read_consensus_varint, read_core_varint
+
+    scripts = [
+        b"\x76\xa9\x14" + bytes(range(20)) + b"\x88\xac",
+        b"\xa9\x14" + bytes(range(20, 40)) + b"\x87",
+        b"\x21\x02" + bytes(range(32)) + b"\xac",
+        b"\x21\x03" + bytes(range(32, 64)) + b"\xac",
+        b"\x41" + G_UNCOMPRESSED + b"\xac",
+        b"\x41" + NEG_G_UNCOMPRESSED + b"\xac",
+        b"",
+        b"\x6a\x01\x02",
+        bytes(range(90)),
+    ]
+    rows = []
+    for k, script in enumerate(scripts):
+        rows.append((bytes([k + 1]) * 32, k, 100 + k, k % 2 == 0, 546 * k, script))
+        rows += [(bytes([k + 101]) * 32, v, 2**40 + v, False, 2_100_000_000_000_000, script) for v in range(3)]
+    write_utxo_dump(path, rows)
+    with open(path, "rb") as f:
+        data = f.read()
+    offsets, pos = [], HEADER_LEN
+    while pos < len(data):
+        count, pos = read_consensus_varint(data, pos + 32)
+        for _ in range(count):
+            for read in (read_consensus_varint, read_core_varint, read_core_varint):
+                _, pos = read(data, pos)
+            offsets.append(pos)
+            _, pos = decode_script(data, pos)
+    return offsets
+
+
+def test_mutation_fuzz_c_matches_python(tmp_path):
+    """Mutated dumps (bytes flipped, truncated, a varint widened or made
+    longer than 64 bits, a bad script-size code) frame and decode alike
+    through the C kernels and the Python fallback: both raise ValueError,
+    or both return the same splits, sample and rows."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from utxo_to_parquet_spark.kernels.header import HEADER_LEN
+    from utxo_to_parquet_spark.kernels.varint import write_core_varint
+    from utxo_to_parquet_spark.sources import native
+    from utxo_to_parquet_spark.sources import utxo_dump as ud
+
+    if native.get_native_framer() is None:
+        pytest.skip("no C compiler available")
+    path = str(tmp_path / "fuzz.dump")
+    script_codes = _every_type_dump(path)
+    with open(path, "rb") as f:
+        base = f.read()
+    bad_codes = [
+        b"\x04",  # uncompressed P2PK over a payload that need not be on the curve
+        b"\x80\x00",  # raw script of 122 bytes: shifts the framing
+        write_core_varint(6 + 10**6),  # raw script past EOF
+        b"\xff" * 10 + b"\x7f",  # size code past 64 bits
+    ]
+
+    def run(data: bytes, python: bool):
+        with open(path, "wb") as f:
+            f.write(data)
+        saved = native.frame_scan_native, native.decode_split_native
+        if python:
+            native.frame_scan_native = native.decode_split_native = lambda *a, **k: None
+        try:
+            ix = ud.index_utxo_dump(path, chunk_rows=5, use_cache=False)
+            decode = ud.read_split if python else _native_batch
+            return ix, [decode(e).to_pylist() for e in ud.split_extents([(path, ix)])]
+        except ValueError:
+            return ValueError
+        finally:
+            native.frame_scan_native, native.decode_split_native = saved
+
+    body = st.integers(HEADER_LEN, len(base) - 1)
+    mutation = st.one_of(
+        st.tuples(st.just("flip"), st.integers(0, len(base) - 1), st.integers(1, 255)),
+        st.tuples(st.just("truncate"), st.integers(0, len(base) - 1), st.just(0)),
+        st.tuples(st.just("widen"), body, st.sampled_from([0xFD, 0xFE, 0xFF])),
+        st.tuples(st.just("long_varint"), body, st.integers(1, 12)),
+        st.tuples(st.just("script_code"), st.sampled_from(script_codes), st.sampled_from(bad_codes)),
+    )
+
+    @settings(max_examples=200, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+    @given(st.lists(mutation, min_size=1, max_size=3))
+    def check(mutations):
+        data = bytearray(base)
+        for kind, pos, arg in mutations:
+            pos = min(pos, len(data) - 1)
+            if kind == "flip":
+                data[pos] ^= arg
+            elif kind == "truncate":
+                del data[pos:]
+            elif kind == "widen":  # the same value in a wider CompactSize
+                data[pos : pos + 1] = bytes([arg]) + data[pos : pos + 1].ljust({0xFD: 2, 0xFE: 4, 0xFF: 8}[arg], b"\x00")
+            elif kind == "long_varint":  # continuation bytes ahead of a varint byte
+                data[pos:pos] = b"\xff" * arg
+            else:
+                data[pos : pos + 1] = arg
+            if len(data) <= HEADER_LEN:
+                break
+        assert run(bytes(data), python=False) == run(bytes(data), python=True)
+
+    check()
 
 
 def test_streaming_datasource_replays_snapshot(tmp_path, spark):

@@ -1,5 +1,5 @@
-"""Measure the ``global_sort`` trade at converter depth: extra-shuffle
-write cost vs point-lookup pruning benefit.
+"""Measure the ``global_sort`` trade at converter depth: the range
+exchange's write cost vs its point-lookup pruning benefit.
 
 SCALING.md's "Output layout" section calls ``global_sort=True`` the right
 100-TB default; this tool replaces that assertion with numbers. At 20M+
@@ -19,7 +19,7 @@ at 20M rows is dominated by fixed task-launch cost, but files-touched
 grows with cluster output width under per-partition sort and stays O(1)
 under global sort.
 
-Usage: python tools/bench_global_sort.py [n_rows] [out_json] [shards]
+Usage: python tools/bench_global_sort.py [n_rows] [out_json] [shards] [reps] [modes]
 Writes one JSON line (default BENCH_gsort.json).
 """
 
@@ -38,9 +38,7 @@ SHARDS = int(sys.argv[3]) if len(sys.argv) > 3 else 8
 # convert reps per mode (best-of): 3 for the standard 20M artifact;
 # mainnet-depth runs pass 2 to keep the 9-convert sweep tractable
 REPS = int(sys.argv[4]) if len(sys.argv) > 4 else 3
-# optional mode filter: mainnet-depth runs skip the true range exchange
-# (its 209.8 s cost at 177M rows is already on record in
-# BENCH_mainnet_lookup.json) and measure only the contender pair
+# optional mode filter (comma-separated labels: per_partition, global)
 MODES = sys.argv[5].split(",") if len(sys.argv) > 5 else None
 BLOCK = 1_000_000
 
@@ -135,15 +133,7 @@ def main():
 
     result: dict[str, dict] = {}
     target = None
-    for label, gsort in (
-        ("per_partition", False),
-        ("global", True),
-        # round 8: sampled-boundary range clustering — same disjoint
-        # file ranges as the true range exchange without its hidden
-        # second decode (RangePartitioner samples by executing the
-        # decode plan)
-        ("global_sampled", "sampled"),
-    ):
+    for label, gsort in (("per_partition", False), ("global", True)):
         if MODES is not None and label not in MODES:
             continue
         out = os.path.join(tmp, f"out_{label}.parquet")

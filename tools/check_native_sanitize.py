@@ -8,7 +8,10 @@ exactly that length and runs ``frame_scan`` (sampling on) and
 ``decode_scan`` over it. The fixtures cover every script compression type,
 CompactSize group counts, and hand-made malformed records (oversized
 script lengths and varints, a group count of 2^63 or more, a header that
-claims more coins than the body holds).
+claims more coins than the body holds, and a vout, height or amount past
+the signed 64-bit schema). At full length, each malformed case must end in
+the return codes it names: a clean decode of a malformed record fails the
+check.
 
 Usage: python tools/check_native_sanitize.py
 
@@ -26,9 +29,18 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from utxo_to_parquet_spark.kernels.amount import compress_amount  # noqa: E402
 from utxo_to_parquet_spark.kernels.header import HEADER_LEN, build_header  # noqa: E402
 from utxo_to_parquet_spark.kernels.varint import write_core_varint  # noqa: E402
-from utxo_to_parquet_spark.sources.native import _C_SOURCE  # noqa: E402
+from utxo_to_parquet_spark.sources.native import (  # noqa: E402
+    _C_SOURCE,
+    AMOUNT,
+    COUNT,
+    HEIGHT,
+    TRUNCATED,
+    VOUT,
+    ZERO_COINS,
+)
 from utxo_to_parquet_spark.sources.utxo_dump import write_utxo_dump  # noqa: E402
 
 HARNESS = r"""
@@ -116,25 +128,47 @@ def _valid_rows():
     return rows
 
 
-def _malformed() -> dict[str, tuple[bytes, int]]:
-    """name -> (file bytes, n_records to frame)."""
+FRAMED = 1  # one split
+
+
+def _malformed() -> dict[str, tuple[bytes, int, int, int]]:
+    """name -> (file bytes, n_records to frame, then the return codes of
+    frame_scan and decode_scan at full length)."""
     rec = b"\x00\x00\x00"  # vout 0, code 0, amount 0
     txid = b"\x42" * 32
     return {
         # script lengths past the body: one that wraps a signed length
         # to -200, one far past 2^64
         "wrapping_script_len": (
-            build_header(2) + txid + b"\x02" + rec + write_core_varint(2**64 - 194) + rec + b"\x06", 2
+            build_header(2) + txid + b"\x02" + rec + write_core_varint(2**64 - 194) + rec + b"\x06", 2,
+            TRUNCATED, TRUNCATED,
         ),
-        "huge_script_len": (build_header(1) + txid + b"\x01" + rec + b"\xff" * 9 + b"\x7f" + b"\x00" * 8, 1),
-        # core varints longer than 64 bits
-        "long_varints": (build_header(1) + txid + b"\x01\x00" + b"\xff" * 12 + b"\x00" + b"\x80" * 12 + b"\x00\x06", 1),
+        "huge_script_len": (
+            build_header(1) + txid + b"\x01" + rec + b"\xff" * 9 + b"\x7f" + b"\x00" * 8, 1, TRUNCATED, TRUNCATED
+        ),
+        # core varints longer than 64 bits in the height code and the
+        # amount: framing skips them, decoding rejects the height
+        "long_varints": (
+            build_header(1) + txid + b"\x01\x00" + b"\xff" * 12 + b"\x00" + b"\x80" * 12 + b"\x00\x06", 1,
+            FRAMED, HEIGHT,
+        ),
         # group counts of 2^63 and more, and zero
-        "count_2p63": (build_header(2) + txid + b"\xff" + b"\x00" * 7 + b"\x80" + rec + b"\x06", 2),
-        "count_max": (build_header(2) + txid + b"\xff" + b"\xff" * 8 + rec + b"\x06", 2),
-        "count_zero": (build_header(1) + txid + b"\x00" + rec + b"\x06", 1),
-        # a vout in the 9-byte form at the very end of the body
-        "vout_9": (build_header(1) + txid + b"\x01\xff" + b"\xff" * 8, 1),
+        "count_2p63": (build_header(2) + txid + b"\xff" + b"\x00" * 7 + b"\x80" + rec + b"\x06", 2, COUNT, COUNT),
+        "count_max": (build_header(2) + txid + b"\xff" + b"\xff" * 8 + rec + b"\x06", 2, COUNT, COUNT),
+        "count_zero": (build_header(1) + txid + b"\x00" + rec + b"\x06", 1, ZERO_COINS, ZERO_COINS),
+        # a vout in the 9-byte form at the very end of the body: the
+        # decoder checks its value before it reads on
+        "vout_9": (build_header(1) + txid + b"\x01\xff" + b"\xff" * 8, 1, TRUNCATED, VOUT),
+        # values past the signed 64-bit schema: vout 2^64-1, an amount
+        # that decompresses past 2^63-1, a compressed amount past 2^64
+        "vout_max": (build_header(1) + txid + b"\x01\xff" + b"\xff" * 8 + b"\x00\x00\x06", 1, FRAMED, VOUT),
+        "amount_over": (
+            build_header(1) + txid + b"\x01\x00\x00" + write_core_varint(compress_amount(93 * 10**17)) + b"\x06", 1,
+            FRAMED, AMOUNT,
+        ),
+        "amount_varint": (
+            build_header(1) + txid + b"\x01\x00\x00" + write_core_varint(2**64 + 5) + b"\x06", 1, FRAMED, AMOUNT
+        ),
     }
 
 
@@ -161,31 +195,33 @@ def _run(work: str) -> int:
     cases = []
     valid = os.path.join(work, "valid.dump")
     write_utxo_dump(valid, rows)
-    cases.append(("valid", valid, len(rows), True))
+    cases.append(("valid", valid, len(rows), None))
     # a header that claims more coins than the body holds
     with open(valid, "rb") as fh:
         body = fh.read()[HEADER_LEN:]
     over = os.path.join(work, "overcount.dump")
     with open(over, "wb") as fh:
         fh.write(build_header(len(rows) + 5) + body)
-    cases.append(("overcount", over, len(rows) + 5, False))
-    for name, (data, n) in _malformed().items():
+    cases.append(("overcount", over, len(rows) + 5, (TRUNCATED, TRUNCATED)))
+    for name, (data, n, frame_rc, decode_rc) in _malformed().items():
         path = os.path.join(work, name + ".dump")
         with open(path, "wb") as fh:
             fh.write(data)
-        cases.append((name, path, n, False))
+        cases.append((name, path, n, (frame_rc, decode_rc)))
 
     env = dict(os.environ, ASAN_OPTIONS="detect_leaks=0", UBSAN_OPTIONS="print_stacktrace=1")
     failed = 0
-    for name, path, n, ok_at_full_length in cases:
+    for name, path, n, expect in cases:
         for chunk, every in ((2, 1), (5, 3)):
             r = subprocess.run([exe, path, str(n), str(chunk), str(every)], capture_output=True, text=True, env=env)
             report = "AddressSanitizer" in r.stderr or "runtime error" in r.stderr
             codes = r.stdout.split()
             bad = r.returncode != 0 or report or len(codes) != 2
-            if not bad and ok_at_full_length:
+            if not bad and expect is None:
                 # the untruncated valid dump must frame and decode cleanly
                 bad = int(codes[0]) <= 0 or int(codes[1]) < 0
+            elif not bad:
+                bad = (int(codes[0]), int(codes[1])) != expect
             print(f"{name:16s} chunk={chunk} sample_every={every} size={os.path.getsize(path):6d} "
                   f"full-length rc={' '.join(codes) or '-'} {'FAIL' if bad else 'clean'}")
             if bad:

@@ -63,7 +63,8 @@ def main(argv: list[str] | None = None) -> None:
     parser.add_argument(
         "--global-sort",
         action="store_true",
-        help="range-partition by script for one global sorted order (extra shuffle)",
+        help="cluster the output by script range: disjoint, sorted files, so a lookup"
+        " touches one file (boundaries come from the framing pass)",
     )
     args = parser.parse_args(argv)
 

@@ -56,16 +56,17 @@ def write_core_varint(n: int) -> bytes:
 
 
 def read_consensus_varint(buf, pos: int) -> tuple[int, int]:
-    """Decode a P2P CompactSize at ``buf[pos:]`` → (value, new_pos)."""
+    """Decode a P2P CompactSize at ``buf[pos:]`` → (value, new_pos).
+
+    Raises ValueError if its width runs past the end of ``buf``."""
     b = buf[pos]
     pos += 1
     if b < 0xFD:
         return b, pos
-    if b == 0xFD:
-        return int.from_bytes(buf[pos : pos + 2], "little"), pos + 2
-    if b == 0xFE:
-        return int.from_bytes(buf[pos : pos + 4], "little"), pos + 4
-    return int.from_bytes(buf[pos : pos + 8], "little"), pos + 8
+    width = 2 if b == 0xFD else 4 if b == 0xFE else 8
+    if pos + width > len(buf):
+        raise ValueError("truncated CompactSize")
+    return int.from_bytes(buf[pos : pos + width], "little"), pos + width
 
 
 def write_consensus_varint(n: int) -> bytes:

@@ -2,7 +2,6 @@ from .utxo_dump import (
     UTXO_SCHEMA,
     index_utxo_dump,
     read_utxo_dump,
-    read_utxo_dump_with_header,
     write_utxo_dump,
 )
 from .convert import convert_utxo_dump_to_parquet
@@ -12,7 +11,6 @@ __all__ = [
     "UTXO_SCHEMA",
     "index_utxo_dump",
     "read_utxo_dump",
-    "read_utxo_dump_with_header",
     "write_utxo_dump",
     "convert_utxo_dump_to_parquet",
     "register_utxo_datasource",

@@ -61,6 +61,14 @@ def _hash_preimages(spark, n: int) -> list[int]:
 # point lookup still touches exactly one of them.
 BUCKET_ROWS = 2_000_000
 
+# parquet writer settings. Pages, not row groups, are the pruning unit
+# (module docstring), so large row groups cost lookups nothing. ZSTD
+# level 1 (vs the reference's default 3, main.rs:210) writes ~35% faster
+# at identical output size on this data: scripts and txids are
+# high-entropy hashes that no zstd level compresses further.
+ROW_GROUP_BYTES = 16 * 1024 * 1024
+ZSTD_LEVEL = 1
+
 
 def _range_bounds(indexed, n_parts: int) -> list[bytes]:
     """Exact weighted ``n_parts``-quantiles of the framing pass's script
@@ -85,9 +93,10 @@ def _range_bounds(indexed, n_parts: int) -> list[bytes]:
 
 
 def _sampled_range_exchange(spark, df, indexed, num_utxos: int):
-    """Range-cluster ``df`` on ``script`` without repartitionByRange's
-    child-plan re-execution: boundaries from the framing pass's prefix
-    sample, routing via one hash exchange on per-bucket preimage literals."""
+    """Range-cluster ``df`` on ``script`` without Spark's range exchange,
+    whose boundary sampling re-executes the child plan: boundaries from
+    the framing pass's prefix sample, routing via one hash exchange on
+    per-bucket preimage literals."""
     from pyspark.sql import functions as F
 
     n_parts = max(
@@ -120,50 +129,39 @@ def convert_utxo_dump_to_parquet(
     *,
     chunk_rows: int = 250_000,
     global_sort: bool = False,
-    row_group_bytes: int = 16 * 1024 * 1024,
     use_cache: bool = True,
     partition_by_height_epoch: int | None = None,
-    zstd_level: int = 1,
 ):
     """Convert a UTXO snapshot to Parquet; returns the decoded row count.
 
     ``global_sort=False`` reproduces the reference exactly: each partition
     (= batch) is independently sorted by ``script``, so the output is a
-    sequence of sorted runs (main.rs:255-258 semantics). ``global_sort=True``
-    range-partitions first — a strictly stronger clustering (one global
-    sorted order) at the cost of one extra shuffle; at 100 TB this is the
-    better trade because every equality predicate then touches a single
-    file's pages.
+    sequence of sorted runs (main.rs:255-258 semantics).
 
-    ``global_sort="sampled"`` buys the same script-clustered layout
-    without ``repartitionByRange``'s hidden second decode:
-    RangePartitioner samples its boundaries by EXECUTING the child plan,
-    and this source's child plan is the full Arrow decode — so the
-    built-in range exchange pays ~2 decodes plus the shuffle (measured
-    4x per-partition cost at mainnet depth, BENCH_mainnet_lookup.json).
-    The sampled mode instead takes exact quantiles of the script-prefix
-    sample the framing pass already collects (a fixed-size systematic
-    sample, so the cost stays bounded at any input size and no row is
-    decoded for it), then routes rows to their range bucket through ONE
-    ordinary hash exchange using per-bucket hash preimages, and sorts
-    within partitions. Each record is decoded once, on the exchange's
-    map side. Files cover disjoint script-prefix ranges exactly as
-    with the true range exchange (footer min/max pruning behaves
-    identically); only the *within-partition placement of equal
-    prefixes* can differ, which no page-pruning path observes.
-    Composite-key layouts (``partition_by_height_epoch``) keep the
-    built-in range exchange.
+    With ``global_sort`` set (any truthy value), the output is
+    range-clustered on ``script``: files cover disjoint script ranges and
+    each is sorted, so an equality predicate touches one file's pages at
+    any output width. The range boundaries are exact quantiles of the script-prefix sample
+    the framing pass already takes (a fixed-size systematic sample, so
+    the cost stays bounded at any input size and no row is decoded for
+    it). Rows reach their range bucket through one ordinary hash
+    exchange on per-bucket hash preimages, then sort within partitions
+    (:func:`_sampled_range_exchange`). Each record is decoded once, on
+    the exchange's map side. Spark's own range exchange would sample its
+    boundaries by executing the child plan, that is, by decoding the
+    whole snapshot a second time.
 
     ``partition_by_height_epoch=N`` adds hive-style output partitioning on
     ``height_epoch = height // N``: height-range queries then prune whole
     directories at plan time (PartitionFilters) before any page statistics
     are consulted — the coarse pruning layer the flat reference layout
     doesn't have. Script clustering still applies within each partition.
+    With ``global_sort`` the range key is (height_epoch, script); the
+    framing sample carries no height, so this composite key alone keeps
+    ``repartitionByRange``.
 
-    ``zstd_level=1`` (vs the reference's default level 3, main.rs:210)
-    writes ~35% faster at identical output size on this data — scripts
-    and txids are high-entropy hashes that no zstd level compresses
-    further, so the extra search effort of level 3 buys nothing here.
+    The writer uses ZSTD at level ``ZSTD_LEVEL`` and ``ROW_GROUP_BYTES``
+    row groups of 64 KiB pages.
     """
     indexed = frame_dump_files(input_path, chunk_rows=chunk_rows, use_cache=use_cache)
     header, df = decode_frames(spark, indexed)
@@ -179,17 +177,17 @@ def convert_utxo_dump_to_parquet(
     # task-local ordering on them and would otherwise insert its own
     # sort-by-partition-cols, destroying the script clustering
     sort_cols = partition_cols + ["script"]
-    if global_sort == "sampled" and not partition_cols:
-        df = _sampled_range_exchange(spark, df, indexed, header.num_utxos)
-    elif global_sort:
+    if global_sort and partition_cols:
         df = df.repartitionByRange(*sort_cols).sortWithinPartitions(*sort_cols)
+    elif global_sort:
+        df = _sampled_range_exchange(spark, df, indexed, header.num_utxos)
     else:
         df = df.sortWithinPartitions(*sort_cols)
     writer = (
         df.write.mode("overwrite")
         .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", str(zstd_level))
-        .option("parquet.block.size", str(row_group_bytes))
+        .option("parquet.compression.codec.zstd.level", str(ZSTD_LEVEL))
+        .option("parquet.block.size", str(ROW_GROUP_BYTES))
         .option("parquet.page.size", str(64 * 1024))
     )
     if partition_cols:

@@ -1,9 +1,10 @@
 """``spark.read.format("utxo_dump")`` — the source as a first-class
 Spark (Python) DataSource, Spark 4's native extension point.
 
-Same two-pass design as :func:`read_utxo_dump` (framing index on the
-driver inside ``partitions()``, parallel decode in ``read()``), but
-integrated with the planner: Spark sees one ``InputPartition`` per decode
+Same two-pass design and the same code as :func:`read_utxo_dump`
+(``frame_dump_files`` on the driver inside ``partitions()``, with its
+thread pool and sidecar cache; ``read_split`` per task in ``read()``),
+but integrated with the planner: Spark sees one ``InputPartition`` per decode
 split and schedules them like any other scan, and the decode yields Arrow
 RecordBatches straight into the vectorized path. Column pruning happens
 in Catalyst above the scan (the format is row-grouped binary; there is
@@ -30,7 +31,6 @@ the input must live on a shared filesystem, as with any file source.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -40,61 +40,33 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-UTXO_SCHEMA_DDL = (
-    "txid string, vout long, height long, coinbase boolean, amount long, script binary"
-)
+from .utxo_dump import UTXO_SCHEMA, frame_dump_files, read_split, split_extents
+
+def _split_partitions(options: dict) -> list[InputPartition]:
+    """One partition per decode split of ``.load(path)``, each holding its
+    :class:`~.utxo_dump.SplitExtent` (picklable, shipped to executors)."""
+    path = options.get("path")
+    if not path:
+        raise ValueError("utxo_dump: .load(path) is required")
+    chunk_rows = int(options.get("chunk_rows", 250_000))
+    return [InputPartition(e) for e in split_extents(frame_dump_files(path, chunk_rows=chunk_rows))]
 
 
-@dataclass
-class UtxoSplitPartition(InputPartition):
-    """One decode split; must be picklable (shipped to executors)."""
-
-    path: str
-    offset: int
-    length: int
-    carried_txid: bytes
-    carried_coins_left: int
-    num_rows: int
+def _read_partition(partition: InputPartition | None) -> Iterator:
+    # Spark plans an empty partition list (an empty snapshot) as [None]
+    if partition is not None:
+        yield read_split(partition.value)
 
 
 class UtxoDumpReader(DataSourceReader):
     def __init__(self, options: dict):
-        path = options.get("path")
-        if not path:
-            raise ValueError("utxo_dump: .load(path) is required")
-        self.path = path
-        self.chunk_rows = int(options.get("chunk_rows", 250_000))
+        self.options = options
 
     def partitions(self) -> Sequence[InputPartition]:
-        import os
+        return _split_partitions(self.options)
 
-        from .utxo_dump import _list_dump_files, index_utxo_dump
-
-        out: list[UtxoSplitPartition] = []
-        for f in _list_dump_files(self.path):
-            f = os.path.abspath(f)
-            _, splits = index_utxo_dump(f, chunk_rows=self.chunk_rows)
-            size = os.path.getsize(f)
-            ends = [s.offset for s in splits[1:]] + [size]
-            out.extend(
-                UtxoSplitPartition(f, s.offset, end - s.offset, s.carried_txid,
-                                   s.carried_coins_left, s.num_rows)
-                for s, end in zip(splits, ends)
-            )
-        return out or [UtxoSplitPartition("", 0, 0, b"\x00" * 32, 0, 0)]
-
-    def read(self, partition: UtxoSplitPartition) -> Iterator:
-        if partition.num_rows == 0:
-            return
-        from .utxo_dump import Split, _decode_split
-
-        with open(partition.path, "rb") as f:
-            f.seek(partition.offset)
-            data = f.read(partition.length)
-        yield _decode_split(
-            data,
-            Split(0, partition.carried_txid, partition.carried_coins_left, partition.num_rows),
-        )
+    def read(self, partition: InputPartition) -> Iterator:
+        return _read_partition(partition)
 
 
 class UtxoDumpStreamReader(DataSourceStreamReader):
@@ -113,26 +85,8 @@ class UtxoDumpStreamReader(DataSourceStreamReader):
     streaming sink (foreachBatch upserts, file sinks)."""
 
     def __init__(self, options: dict):
-        import os
-
-        from .utxo_dump import _list_dump_files, index_utxo_dump
-
-        path = options.get("path")
-        if not path:
-            raise ValueError("utxo_dump: .load(path) is required")
-        chunk_rows = int(options.get("chunk_rows", 250_000))
         self.splits_per_trigger = int(options.get("splits_per_trigger", 8))
-        self._parts: list[UtxoSplitPartition] = []
-        for f in _list_dump_files(path):
-            f = os.path.abspath(f)
-            _, splits = index_utxo_dump(f, chunk_rows=chunk_rows)
-            size = os.path.getsize(f)
-            ends = [s.offset for s in splits[1:]] + [size]
-            self._parts.extend(
-                UtxoSplitPartition(f, s.offset, end - s.offset, s.carried_txid,
-                                   s.carried_coins_left, s.num_rows)
-                for s, end in zip(splits, ends)
-            )
+        self._parts = _split_partitions(options)
 
     def initialOffset(self) -> dict:
         return {"split": 0}
@@ -146,22 +100,10 @@ class UtxoDumpStreamReader(DataSourceStreamReader):
         return {"split": self._avail}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        return self._parts[start["split"] : end["split"]] or [
-            UtxoSplitPartition("", 0, 0, b"\x00" * 32, 0, 0)
-        ]
+        return self._parts[start["split"] : end["split"]]
 
-    def read(self, partition: UtxoSplitPartition) -> Iterator:
-        if partition.num_rows == 0:
-            return
-        from .utxo_dump import Split, _decode_split
-
-        with open(partition.path, "rb") as f:
-            f.seek(partition.offset)
-            data = f.read(partition.length)
-        yield _decode_split(
-            data,
-            Split(0, partition.carried_txid, partition.carried_coins_left, partition.num_rows),
-        )
+    def read(self, partition: InputPartition) -> Iterator:
+        return _read_partition(partition)
 
     def commit(self, end: dict) -> None:
         pass
@@ -175,7 +117,7 @@ class UtxoDumpDataSource(DataSource):
         return "utxo_dump"
 
     def schema(self) -> str:
-        return UTXO_SCHEMA_DDL
+        return UTXO_SCHEMA
 
     def reader(self, schema) -> UtxoDumpReader:
         return UtxoDumpReader(self.options)

@@ -53,17 +53,23 @@ static int compact_size(const uint8_t *data, long size, long *pos, uint64_t *v)
     return 0;
 }
 
-/* Bitcoin Core varint at *pos (main.rs:45-59). Returns 0, or -1 if it
- * runs past size. */
+/* Bitcoin Core varint at *pos (main.rs:45-59). Returns 0, -1 if it runs
+ * past size, or 1 if its value does not fit 64 bits (*pos still moves
+ * past it, so framing can skip the field). The value never decreases
+ * from one byte to the next, so once over, it stays over. */
 static int core_varint(const uint8_t *data, long size, long *pos, uint64_t *v)
 {
     uint64_t x = 0;
+    int over = 0;
     for (long p = *pos;;) {
         if (p >= size) return -1;
         uint8_t b = data[p++];
+        if (x > (UINT64_MAX >> 7)) over = 1;
         x = (x << 7) | (b & 0x7F);
-        if (b & 0x80) x += 1;
-        else { *v = x; *pos = p; return 0; }
+        if (b & 0x80) {
+            if (x == UINT64_MAX) over = 1;
+            x += 1;
+        } else { *v = x; *pos = p; return over; }
     }
 }
 
@@ -94,8 +100,9 @@ static void script_prefix(const uint8_t *payload, uint64_t stype, uint64_t plen,
  * txid, coins left in the current group at the split start, row count.
  * Records 0, k, 2k, ... (k = sample_every) also write their script's
  * 7-byte prefix to out_sample, ceil(n_records / k) prefixes in all.
- * Returns the number of splits, or a negative error code:
- *   -1 truncated, -2 zero-coin group, -3 split or sample capacity exceeded.
+ * Returns the number of splits, or a negative error code (ERRORS in
+ * native.py): -1 truncated, -2 zero-coin group, -3 group count past
+ * INT64_MAX, -4 split or sample capacity exceeded.
  */
 long frame_scan(const uint8_t *data, long size, long start,
                 long n_records, long chunk_rows,
@@ -116,18 +123,21 @@ long frame_scan(const uint8_t *data, long size, long start,
             txid_off = pos;
             pos += 32;
             if (compact_size(data, size, &pos, &v)) return -1;
-            if (v == 0 || v > LONG_MAX) return -2;
+            if (v == 0) return -2;
+            if (v > LONG_MAX) return -3;
             coins_left = (long)v;
         }
-        /* vout, code, amount: skipped; script type: sizes the payload */
+        /* vout, code, amount: skipped (their values are the decoder's to
+         * check); script type: sizes the payload, and one past 64 bits
+         * is past EOF */
         if (compact_size(data, size, &pos, &v)) return -1;
-        if (core_varint(data, size, &pos, &v)) return -1;
-        if (core_varint(data, size, &pos, &v)) return -1;
+        if (core_varint(data, size, &pos, &v) < 0) return -1;
+        if (core_varint(data, size, &pos, &v) < 0) return -1;
         if (core_varint(data, size, &pos, &stype)) return -1;
         uint64_t plen = (stype < 6) ? ((stype < 2) ? 20 : 32) : stype - 6;
         if (plen > (uint64_t)(size - pos)) return -1;
         if (--sample_wait == 0) {
-            if (n_samples >= max_samples) return -3;
+            if (n_samples >= max_samples) return -4;
             script_prefix(data + pos, stype, plen, out_sample + 7 * n_samples);
             n_samples++;
             sample_wait = sample_every;
@@ -137,7 +147,7 @@ long frame_scan(const uint8_t *data, long size, long start,
         coins_left--;
         chunk_seen++;
         if (chunk_seen == chunk_rows || i == n_records - 1) {
-            if (n_splits >= max_splits) return -3;
+            if (n_splits >= max_splits) return -4;
             out_off[n_splits] = chunk_start;
             out_txid_off[n_splits] = chunk_txid;
             out_coins[n_splits] = chunk_coins;
@@ -164,10 +174,12 @@ static void txid_hex(const uint8_t *txid, uint8_t *out)
     }
 }
 
-/* inverse of Bitcoin Core's CompressAmount (main.rs:83-107) */
-static int64_t decompress_amount(uint64_t x)
+/* inverse of Bitcoin Core's CompressAmount (main.rs:83-107). Returns 0,
+ * or -1 if the amount does not fit int64. Before the scaling loop n is
+ * below 2^61, so only the loop can overflow. */
+static int decompress_amount(uint64_t x, int64_t *out)
 {
-    if (x == 0) return 0;
+    if (x == 0) { *out = 0; return 0; }
     x--;
     int e = (int)(x % 10);
     x /= 10;
@@ -179,8 +191,12 @@ static int64_t decompress_amount(uint64_t x)
     } else {
         n = x + 1;
     }
-    while (e--) n *= 10;
-    return (int64_t)n;
+    for (; e > 0; e--) {
+        if (n > INT64_MAX / 10) return -1;
+        n *= 10;
+    }
+    *out = (int64_t)n;
+    return 0;
 }
 
 /* Fully decode n_records coins of one split into Arrow-ready buffers.
@@ -190,8 +206,10 @@ static int64_t decompress_amount(uint64_t x)
  * Types 4/5 write the P2PK template with Y zeroed and append
  * (script_buf offset, parity prefix 2/3) to exc_off/exc_parity for the
  * caller to patch (secp256k1 sqrt stays in Python).
- * Returns the exception count, or negative: -1 truncated, -2 zero-coin
- * group, -4 script_buf capacity exceeded.
+ * Returns the exception count, or a negative error code (ERRORS in
+ * native.py): -1 truncated, -2 zero-coin group, -3 group count past
+ * INT64_MAX, -4 script_buf capacity exceeded, -5 script bytes past int32
+ * offsets, -6/-7/-8 vout/height/amount past INT64_MAX.
  */
 long decode_scan(const uint8_t *data, long size, long start,
                  long coins_left, const uint8_t *carried_txid, long n_records,
@@ -214,18 +232,22 @@ long decode_scan(const uint8_t *data, long size, long start,
             txid_hex(data + pos, cur_hex);
             pos += 32;
             if (compact_size(data, size, &pos, &v)) return -1;
-            if (v == 0 || v > LONG_MAX) return -2;
+            if (v == 0) return -2;
+            if (v > LONG_MAX) return -3;
             coins_left = (long)v;
         }
         for (int k = 0; k < 64; k++) txhex[i*64 + k] = cur_hex[k];
 
         if (compact_size(data, size, &pos, &v)) return -1;
+        if (v > INT64_MAX) return -6;
         vout[i] = (int64_t)v;
-        if (core_varint(data, size, &pos, &code)) return -1;
-        if (core_varint(data, size, &pos, &amt)) return -1;
+        int rc = core_varint(data, size, &pos, &code);
+        if (rc) return rc < 0 ? -1 : -7;
         height[i] = (int64_t)(code >> 1);
         coinbase[i] = (uint8_t)(code & 1);
-        amount[i] = decompress_amount(amt);
+        rc = core_varint(data, size, &pos, &amt);
+        if (rc) return rc < 0 ? -1 : -8;
+        if (decompress_amount(amt, &amount[i])) return -8;
 
         /* script: compressed special forms or raw (main.rs:109-161) */
         if (core_varint(data, size, &pos, &slen)) return -1;
@@ -282,6 +304,25 @@ long decode_scan(const uint8_t *data, long size, long start,
 
 _lib = None
 _tried = False
+
+# the kernels' negative return codes; messages match the Python framer
+# and decoder in sources/utxo_dump.py
+TRUNCATED, ZERO_COINS, COUNT, CAPACITY, SCRIPT_BYTES, VOUT, HEIGHT, AMOUNT = range(-1, -9, -1)
+ERRORS = {
+    TRUNCATED: "truncated dump: record runs past EOF",
+    ZERO_COINS: "invalid dump: zero coins for txid group",
+    COUNT: "invalid dump: coin count out of range",
+    CAPACITY: "buffer capacity exceeded",
+    SCRIPT_BYTES: "chunk script bytes exceed int32 offset range — use a smaller chunk_rows",
+    VOUT: "invalid dump: vout out of range",
+    HEIGHT: "invalid dump: height out of range",
+    AMOUNT: "invalid dump: amount out of range",
+}
+
+
+def _check(rc: int, what: str) -> None:
+    if rc < 0:
+        raise ValueError(ERRORS.get(rc, f"{what} failed with code {rc}"))
 
 
 def _build() -> "ctypes.CDLL | None":
@@ -368,13 +409,17 @@ def frame_scan_native(path: str, start: int, n_records: int, chunk_rows: int, sa
     lib = get_native_framer()
     if lib is None:
         return None
+    size = os.path.getsize(path)
+    # a record takes at least 4 bytes: a header that counts more coins
+    # than that would size the split arrays from a bogus count
+    if n_records > (size - start) // 4:
+        raise ValueError(ERRORS[TRUNCATED])
     with open(path, "rb") as fh:
         # ACCESS_COPY gives a writable (copy-on-write) view, which ctypes
         # can address zero-copy via from_buffer; we never write to it
         mm = mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_COPY)
         c_data = None
         try:
-            size = len(mm)
             max_splits = max(n_records // max(chunk_rows, 1) + 2, 16)
             off = (ctypes.c_long * max_splits)()
             txo = (ctypes.c_long * max_splits)()
@@ -387,12 +432,7 @@ def frame_scan_native(path: str, start: int, n_records: int, chunk_rows: int, sa
                 c_data, size, start, n_records, chunk_rows, off, txo, coins, rows, max_splits,
                 sample_every, sample, n_samples,
             )
-            if n == -1:
-                raise ValueError("truncated dump: framing ran past EOF")
-            if n == -2:
-                raise ValueError("invalid dump: zero coins for txid group")
-            if n < 0:
-                raise ValueError(f"framing failed with code {n}")
+            _check(n, "framing")
             out = []
             for k in range(n):
                 txid = mm[txo[k] : txo[k] + 32] if txo[k] >= 0 else b"\x00" * 32
@@ -452,19 +492,7 @@ def decode_split_native(data: bytes, carried_txid: bytes, carried_coins_left: in
         exc_off.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
         exc_parity.ctypes.data_as(u8p),
     )
-    if ret == -1:
-        raise ValueError("truncated dump: record payload past EOF")
-    if ret == -2:
-        raise ValueError("invalid dump: zero coins for txid group")
-    if ret == -4:
-        raise ValueError("decode failed: script buffer capacity exceeded")
-    if ret == -5:
-        raise ValueError(
-            "decode failed: chunk script bytes exceed int32 offset range"
-            " — use a smaller chunk_rows"
-        )
-    if ret < 0:
-        raise ValueError(f"decode failed with code {ret}")
+    _check(ret, "decode")
 
     # patch uncompressed-P2PK Y coordinates (256-bit modular sqrt)
     for k in range(ret):

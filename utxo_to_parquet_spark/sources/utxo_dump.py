@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Iterable, Iterator
+from typing import Iterable, NamedTuple, get_type_hints
 
 from ..kernels.amount import compress_amount, decompress_amount
 from ..kernels.header import HEADER_LEN, UtxoHeader, build_header, parse_header
@@ -51,6 +51,8 @@ from ..kernels.varint import (
 UTXO_SCHEMA = (
     "txid string, vout long, height long, coinbase boolean, amount long, script binary"
 )
+# every integer column is a signed 64-bit LONG
+INT64_MAX = 2**63 - 1
 
 
 @dataclass(frozen=True)
@@ -60,6 +62,18 @@ class Split:
     offset: int  # absolute byte offset of the first record in this split
     carried_txid: bytes  # txid in effect at `offset` (internal byte order)
     carried_coins_left: int  # coins remaining in the current run-length group
+    num_rows: int
+
+
+class SplitExtent(NamedTuple):
+    """A split with the file and byte range it decodes from: the unit
+    every reader hands to a task (:func:`split_extents`, :func:`read_split`)."""
+
+    path: str
+    offset: int
+    length: int
+    carried_txid: bytes
+    carried_coins_left: int
     num_rows: int
 
 
@@ -136,6 +150,9 @@ def write_utxo_dump(
 # bytes the sample reads:
 # txid(32) + count(<=9) + vout(<=9) + code(<=10) + amount(<=10) + len(<=10) + 7
 _FRAME_MARGIN = 87
+# the Python framer reads the file in windows of this size, so driver
+# memory stays bounded at any file size
+WINDOW_BYTES = 64 * 1024 * 1024
 
 # size of the framing pass's systematic sample of script prefixes, from
 # which the sampled global sort takes its range boundaries (convert.py):
@@ -173,8 +190,14 @@ def _load_split_cache(path: str, chunk_rows: int) -> "DumpIndex | None":
     The framing pass is the one sequential stage (Amdahl's bound on the
     whole conversion at large inputs), but it's a pure function of the
     file bytes — so it is computed once and persisted next to the input.
-    Validity = (size, mtime_ns, chunk_rows, SAMPLE_ROWS) all match; a
-    sidecar without a sample is a miss.
+    Validity = the sidecar's digest matches its content, (size,
+    mtime_ns, chunk_rows, SAMPLE_ROWS) all match, the sample has the
+    header's length, split rows sum to ``num_utxos``, the first split
+    carries no coins and split offsets strictly increase from HEADER_LEN
+    within the file; an old-format, damaged or stale sidecar is a miss.
+    The digest is what catches an edited interior split (a moved offset,
+    a changed carried txid or count), which would otherwise decode as a
+    fault of the dump.
     """
     import json
 
@@ -184,7 +207,8 @@ def _load_split_cache(path: str, chunk_rows: int) -> "DumpIndex | None":
             doc = json.load(fh)
         st = os.stat(path)
         if (
-            doc["size"] != st.st_size
+            doc["digest"] != _split_digest(doc)
+            or doc["size"] != st.st_size
             or doc["mtime_ns"] != st.st_mtime_ns
             or doc["chunk_rows"] != chunk_rows
             or doc["sample_rows"] != SAMPLE_ROWS
@@ -199,9 +223,26 @@ def _load_split_cache(path: str, chunk_rows: int) -> "DumpIndex | None":
         sample = bytes.fromhex(doc["sample"])
         if len(sample) != PREFIX_LEN * -(-header.num_utxos // stride):
             return None
+        offsets = [s.offset for s in splits] + [st.st_size]
+        if (
+            sum(s.num_rows for s in splits) != header.num_utxos
+            or any(s.num_rows <= 0 for s in splits)
+            or (splits and (splits[0].offset, splits[0].carried_coins_left) != (HEADER_LEN, 0))
+            or any(a >= b for a, b in zip(offsets, offsets[1:]))
+        ):
+            return None
         return DumpIndex(header, splits, stride, sample)
     except (OSError, KeyError, ValueError, TypeError, ZeroDivisionError):
         return None
+
+
+def _split_digest(doc: dict) -> str:
+    """sha256 of a sidecar's content, every field but the digest itself."""
+    import hashlib
+    import json
+
+    body = {k: v for k, v in doc.items() if k != "digest"}
+    return hashlib.sha256(json.dumps(body, sort_keys=True).encode()).hexdigest()
 
 
 def _store_split_cache(path: str, chunk_rows: int, index: DumpIndex) -> None:
@@ -221,6 +262,7 @@ def _store_split_cache(path: str, chunk_rows: int, index: DumpIndex) -> None:
             ],
             "sample": index.sample.hex(),
         }
+        doc["digest"] = _split_digest(doc)
         tmp = _index_cache_path(path) + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(doc, fh)
@@ -229,23 +271,7 @@ def _store_split_cache(path: str, chunk_rows: int, index: DumpIndex) -> None:
         pass  # cache is best-effort (read-only input dirs are fine)
 
 
-def index_utxo_dump(
-    path: str,
-    chunk_rows: int = 250_000,
-    window_bytes: int = 64 * 1024 * 1024,
-    use_cache: bool = True,
-) -> tuple[UtxoHeader, list[Split]]:
-    """The header and decode splits of :func:`frame_utxo_dump`."""
-    index = frame_utxo_dump(path, chunk_rows, window_bytes, use_cache)
-    return index.header, index.splits
-
-
-def frame_utxo_dump(
-    path: str,
-    chunk_rows: int = 250_000,
-    window_bytes: int = 64 * 1024 * 1024,
-    use_cache: bool = True,
-) -> DumpIndex:
+def index_utxo_dump(path: str, chunk_rows: int = 250_000, use_cache: bool = True) -> DumpIndex:
     """Walk record framing sequentially and emit decode splits.
 
     Only lengths are examined — scripts are skipped, amounts/heights are
@@ -253,7 +279,8 @@ def frame_utxo_dump(
     full decode. The loop is fully inlined over a bytes window (function
     calls and numpy scalar indexing both cost more than the work itself
     at this granularity; measured ~800k records/s/core in CPython).
-    Windows keep driver memory O(window) regardless of file size.
+    Windows (``WINDOW_BYTES``) keep driver memory bounded regardless of
+    file size.
 
     On the way it takes a systematic sample of every k-th record's
     script prefix (k = ceil(rows / SAMPLE_ROWS)): the first PREFIX_LEN
@@ -261,8 +288,9 @@ def frame_utxo_dump(
     type and the payload bytes the walk steps over, with no
     decompression.
 
-    Raises ValueError on malformed input (bad magic, zero-coin group,
-    truncation), mirroring the reference's asserts (main.rs:174,225).
+    Raises ValueError on malformed input (bad magic, a group of zero or
+    more than 2^63-1 coins, truncation), mirroring the reference's
+    asserts (main.rs:174,225).
 
     With ``use_cache`` (default), the index is persisted to a
     ``<path>.splits.json`` sidecar and reused while the file identity
@@ -285,12 +313,7 @@ def frame_utxo_dump(
         # fall through to the Python loop when no compiler is available
         from .native import frame_scan_native
 
-        try:
-            native = frame_scan_native(path, HEADER_LEN, n, chunk_rows, stride)
-        except ValueError:
-            raise
-        except Exception:
-            native = None
+        native = frame_scan_native(path, HEADER_LEN, n, chunk_rows, stride)
         if native is not None:
             index = DumpIndex(
                 header, [Split(o, t, c, r) for o, t, c, r in native[0]], stride, native[1]
@@ -300,7 +323,7 @@ def frame_utxo_dump(
             return index
 
         win_start = HEADER_LEN
-        data = f.read(window_bytes)
+        data = f.read(WINDOW_BYTES)
         win_len = len(data)
 
         splits: list[Split] = []
@@ -321,7 +344,7 @@ def frame_utxo_dump(
                 if pos + _FRAME_MARGIN > win_len and win_start + win_len < file_size:
                     win_start += pos
                     f.seek(win_start)
-                    data = f.read(window_bytes)
+                    data = f.read(WINDOW_BYTES)
                     win_len = len(data)
                     pos = 0
                 if pos >= win_len:
@@ -353,6 +376,8 @@ def frame_utxo_dump(
                         pos += 9
                     if coins_left <= 0:
                         raise ValueError("invalid dump: zero coins for txid group")
+                    if coins_left > INT64_MAX:
+                        raise ValueError("invalid dump: coin count out of range")
 
                 # vout (consensus varint): width from the lead byte
                 b0 = data[pos]
@@ -413,13 +438,16 @@ def frame_utxo_dump(
 # pass 2: parallel decode
 # ---------------------------------------------------------------------------
 
-def _decode_split(data, split: Split):
-    """Fully decode ``split.num_rows`` records starting at ``split.offset``
-    into a pyarrow RecordBatch.
+def _decode_split(data: bytes, carried_txid: bytes, carried_coins_left: int, num_rows: int):
+    """Fully decode ``num_rows`` records from the start of ``data`` (one
+    split's bytes) into a pyarrow RecordBatch.
 
     Matches the reference's Batch struct (main.rs:280-288): parallel
-    columns, Arrow at the batch boundary. Numerics land in preallocated
-    numpy arrays (zero-copy into Arrow); txid is rendered
+    columns, Arrow at the batch boundary. The C kernel decodes when it
+    is available; this Python loop is its fallback and its twin. Both
+    raise ValueError naming the field when a vout, height or amount
+    does not fit its signed 64-bit column. Numerics land in
+    preallocated numpy arrays (zero-copy into Arrow); txid is rendered
     byte-reversed-hex once per run-length group, not per row.
     """
     import numpy as np
@@ -427,22 +455,14 @@ def _decode_split(data, split: Split):
 
     from .native import decode_split_native
 
-    if split.offset == 0 and isinstance(data, (bytes, memoryview)):
-        try:
-            rb = decode_split_native(
-                bytes(data), split.carried_txid, split.carried_coins_left, split.num_rows
-            )
-        except ValueError:
-            raise
-        except Exception:
-            rb = None
-        if rb is not None:
-            return rb
+    rb = decode_split_native(data, carried_txid, carried_coins_left, num_rows)
+    if rb is not None:
+        return rb
 
-    n = split.num_rows
-    pos = split.offset
-    coins_left = split.carried_coins_left
-    txid_hex = split.carried_txid[::-1].hex()
+    n = num_rows
+    pos = 0
+    coins_left = carried_coins_left
+    txid_hex = carried_txid[::-1].hex()
 
     txids: list[str] = []
     vouts = np.empty(n, dtype=np.int64)
@@ -451,25 +471,39 @@ def _decode_split(data, split: Split):
     amounts = np.empty(n, dtype=np.int64)
     scripts: list[bytes] = []
 
-    for i in range(n):
-        if coins_left == 0:
-            txid_hex = bytes(data[pos : pos + 32])[::-1].hex()
-            pos += 32
-            coins_left, pos = read_consensus_varint(data, pos)
-            if coins_left <= 0:
-                raise ValueError("invalid dump: zero coins for txid group")
-        vout, pos = read_consensus_varint(data, pos)
-        code, pos = read_core_varint(data, pos)
-        compressed_amount, pos = read_core_varint(data, pos)
-        script, pos = decode_script(data, pos)
-        coins_left -= 1
+    try:
+        for i in range(n):
+            if coins_left == 0:
+                if pos + 33 > len(data):
+                    raise ValueError("truncated dump: expected txid")
+                txid_hex = data[pos : pos + 32][::-1].hex()
+                pos += 32
+                coins_left, pos = read_consensus_varint(data, pos)
+                if coins_left <= 0:
+                    raise ValueError("invalid dump: zero coins for txid group")
+                if coins_left > INT64_MAX:
+                    raise ValueError("invalid dump: coin count out of range")
+            vout, pos = read_consensus_varint(data, pos)
+            if vout > INT64_MAX:
+                raise ValueError("invalid dump: vout out of range")
+            code, pos = read_core_varint(data, pos)
+            if code >> 64:  # height = code >> 1 must fit 63 bits
+                raise ValueError("invalid dump: height out of range")
+            compressed_amount, pos = read_core_varint(data, pos)
+            amount = decompress_amount(compressed_amount)
+            if compressed_amount >> 64 or amount > INT64_MAX:
+                raise ValueError("invalid dump: amount out of range")
+            script, pos = decode_script(data, pos)
+            coins_left -= 1
 
-        txids.append(txid_hex)
-        vouts[i] = vout
-        heights[i] = code >> 1
-        coinbases[i] = bool(code & 1)
-        amounts[i] = decompress_amount(compressed_amount)
-        scripts.append(script)
+            txids.append(txid_hex)
+            vouts[i] = vout
+            heights[i] = code >> 1
+            coinbases[i] = bool(code & 1)
+            amounts[i] = amount
+            scripts.append(script)
+    except IndexError:
+        raise ValueError("truncated dump: record runs past its split") from None
 
     return pa.RecordBatch.from_arrays(
         [
@@ -487,12 +521,13 @@ def _decode_split(data, split: Split):
 def read_utxo_dump(spark, path: str, *, chunk_rows: int = 250_000, use_cache: bool = True):
     """Read a ``dumptxoutset`` snapshot into a DataFrame, in parallel.
 
-    Framing pass on the driver → one decode task per split on executors
-    via ``mapInArrow`` (Arrow RecordBatches cross the Python/JVM boundary
-    directly — no pandas materialization, no per-row crossings).
+    ``path`` may be a single snapshot, a directory of snapshot shards, or
+    a glob. Framing pass on the driver → one decode task per split on
+    executors via ``mapInArrow`` (Arrow RecordBatches cross the
+    Python/JVM boundary directly — no pandas materialization, no per-row
+    crossings).
     """
-    _, df = read_utxo_dump_with_header(spark, path, chunk_rows=chunk_rows, use_cache=use_cache)
-    return df
+    return decode_frames(spark, frame_dump_files(path, chunk_rows=chunk_rows, use_cache=use_cache))[1]
 
 
 def _list_dump_files(path: str) -> list[str]:
@@ -515,38 +550,20 @@ def _list_dump_files(path: str) -> list[str]:
     return files
 
 
-def read_utxo_dump_with_header(
-    spark,
-    path: str,
-    *,
-    chunk_rows: int = 250_000,
-    use_cache: bool = True,
-):
-    """Like :func:`read_utxo_dump` but also returns the parsed snapshot
-    header, so callers needing ``num_utxos`` don't re-run the framing
-    pass (the one sequential stage).
-
-    ``path`` may be a single snapshot, a directory of snapshot shards, or
-    a glob. The returned header carries the FIRST file's
-    version/network/block-hash and the SUM of rows across files.
-    """
-    return decode_frames(spark, frame_dump_files(path, chunk_rows=chunk_rows, use_cache=use_cache))
-
-
 def frame_dump_files(
     path: str, *, chunk_rows: int = 250_000, use_cache: bool = True
 ) -> list[tuple[str, DumpIndex]]:
-    """Frame every file of ``path`` (see :func:`read_utxo_dump_with_header`),
-    once each. Multi-file inputs frame in a thread pool — the C framing
-    kernel releases the GIL inside ctypes, so per-file framing runs
-    truly in parallel, removing the sequential-pass bound whenever the
-    input is sharded."""
+    """Frame every file of ``path`` (a snapshot, a directory of shards or
+    a glob), once each. Multi-file inputs frame in a thread pool — the C
+    framing kernel releases the GIL inside ctypes, so per-file framing
+    runs truly in parallel, removing the sequential-pass bound whenever
+    the input is sharded."""
     from concurrent.futures import ThreadPoolExecutor
 
     files = [os.path.abspath(f) for f in _list_dump_files(path)]
 
     def index_one(f):
-        return f, frame_utxo_dump(f, chunk_rows=chunk_rows, use_cache=use_cache)
+        return f, index_utxo_dump(f, chunk_rows=chunk_rows, use_cache=use_cache)
 
     if len(files) == 1:
         return [index_one(files[0])]
@@ -554,54 +571,53 @@ def frame_dump_files(
         return list(pool.map(index_one, files))
 
 
+def split_extents(indexed: list[tuple[str, DumpIndex]]) -> list[SplitExtent]:
+    """Every split of framed files (:func:`frame_dump_files`) with its
+    byte extent, which ends where the next split begins — tasks read only
+    their own range, so I/O per task is O(split), not O(file)."""
+    out = []
+    for f, ix in indexed:
+        ends = [s.offset for s in ix.splits[1:]] + [os.path.getsize(f)]
+        out += [
+            SplitExtent(f, s.offset, end - s.offset, s.carried_txid, s.carried_coins_left, s.num_rows)
+            for s, end in zip(ix.splits, ends)
+        ]
+    return out
+
+
+def read_split(extent: SplitExtent):
+    """Read one split's bytes and decode them into a RecordBatch."""
+    with open(extent.path, "rb") as f:
+        f.seek(extent.offset)
+        data = f.read(extent.length)
+    return _decode_split(data, extent.carried_txid, extent.carried_coins_left, extent.num_rows)
+
+
 def decode_frames(spark, indexed: list[tuple[str, DumpIndex]]):
     """The combined header and the parallel decode DataFrame of framed
-    files (:func:`frame_dump_files`)."""
+    files (:func:`frame_dump_files`). The header carries the FIRST
+    file's version/network/block-hash and the SUM of rows across files,
+    so callers needing ``num_utxos`` don't re-run the framing pass."""
     header = indexed[0][1].header
     total_rows = sum(ix.header.num_utxos for _, ix in indexed)
     header = UtxoHeader(header.version, header.network, header.block_hash, total_rows)
 
-    rows = []
-    for f, ix in indexed:
-        size = os.path.getsize(f)
-        ends = [s.offset for s in ix.splits[1:]] + [size]
-        rows.extend(
-            (f, s.offset, end - s.offset, s.carried_txid, s.carried_coins_left, s.num_rows)
-            for s, end in zip(ix.splits, ends)
-        )
-    if not rows:  # empty-but-valid snapshot(s)
+    extents = split_extents(indexed)
+    if not extents:  # empty-but-valid snapshot(s)
         return header, spark.createDataFrame([], UTXO_SCHEMA)
 
-    # each split's byte extent ends where the next begins — tasks read only
-    # their own range, so I/O per task is O(split), not O(file).
-    # parallelize(numSlices=len(rows)) pins one split per partition up
+    # parallelize(numSlices=len(extents)) pins one split per partition up
     # front — no repartition shuffle stage between the descriptor list and
     # the decode tasks.
+    spark_type = {str: "string", int: "long", bytes: "binary"}
     splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=len(rows)),
-        "path string, offset long, length long, carried_txid binary,"
-        " carried_coins_left long, num_rows long",
+        spark.sparkContext.parallelize(extents, numSlices=len(extents)),
+        ", ".join(f"{k} {spark_type[t]}" for k, t in get_type_hints(SplitExtent).items()),
     )
 
     def decode(batches):
-        # Spark reuses Python workers across tasks, so leaked descriptors
-        # accumulate over a session — close every handle when this task's
-        # batch iterator is exhausted (or errors).
-        handles: dict[str, object] = {}
-        try:
-            for rb in batches:
-                for row in rb.to_pylist():
-                    f = handles.get(row["path"])
-                    if f is None:
-                        f = handles[row["path"]] = open(row["path"], "rb")
-                    f.seek(row["offset"])
-                    data = f.read(row["length"])
-                    yield _decode_split(
-                        data,
-                        Split(0, bytes(row["carried_txid"]), row["carried_coins_left"], row["num_rows"]),
-                    )
-        finally:
-            for f in handles.values():
-                f.close()
+        for rb in batches:
+            for row in rb.to_pylist():
+                yield read_split(SplitExtent(**row))
 
     return header, splits_df.mapInArrow(decode, UTXO_SCHEMA)
